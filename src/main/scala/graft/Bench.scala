@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -359,7 +358,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
     // load gate (VERDICT r12 item 2): wait for ambient quiet before
@@ -376,47 +374,15 @@ object Bench {
       System.err.println(f"BENCH LOAD GATE EXCEEDED: starting at " +
         f"$loadStart%.2f > $maxLoad%.2f after ${waited}s — numbers are " +
         "ambient-load-inflated (load_exceeded:true in the payload)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-      // TIMESTAMP (UTC session) like every engine-side consumer expects
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: the default 100-entry codegen cache cannot hold a 360-query
-      // registry — every bench rep re-ran Janino compilation for every
-      // query (q101 spent ~3 s/rep compiling; back-to-back reps with a
-      // warm cache ran the same query in 0.6 s). A warm session keeps
-      // its compiled code; entries are weak-referenced classes, ~tens
-      // of KB each. Static conf — must be set before session start.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = GraftSession.builder()
       // dev A/B knob (r18): AQE coalescing with parallelismFirst=false
       // sizes post-shuffle partitions by bytes (guide §2.2) instead of
       // inflating the count to idle cores
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // r18 (guide §5, measured with tools/PhaseProbe): operator-internal
-      // localCheckpoints become unreachable garbage the moment a query's
-      // action completes, but their MEMORY_AND_DISK blocks are only
-      // dropped when the ContextCleaner sees the RDD collected — on an
-      // 8 GB driver that can lag a full bench pass, accumulating GBs of
-      // dead blocks (~250 MB per rep from the rankBy riders alone) whose
-      // eviction churn degraded every later query (the r17 warm>cold
-      // inversions). A 45 s periodic GC bounds the garbage window; the
-      // same setting matters on any long-lived session running thousands
-      // of queries, cluster or local.
-      .config("spark.cleaner.periodicGC.interval", "45s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // silence the expected WindowExec single-partition WARNs (see
-    // Verify.scala — the plan lint polices the window shape; the spam
-    // buries real warnings in the driver's tail)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietWindowWarnings()
     // untimed warm-up: JIT/codegen + parquet footer reads, so the first
     // timed query doesn't absorb JVM startup
     try {

@@ -11,7 +11,7 @@ import graft.functions.expressions.{CosineSimilarity, LshSignBucket}
   * `SELECT cosine_similarity(a, b)` works anywhere `spark.sql` does.
   *
   * Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `GraftSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`; [[GraftExtensions.register]]
   * does the same on an already-built session.
   */

@@ -628,23 +628,10 @@ object ScalingBench {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty && args.head != "synth") args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-      // TIMESTAMP (UTC session) like every engine-side consumer expects
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
+    val spark = GraftSession.builder()
       // FAIR so the concurrent probe's per-thread pools share task slots
       // round-robin; serial probes are unaffected (one job at a time)
       .config("spark.scheduler.mode", "FAIR")
-      // r18: codegen-cache sized to the workload (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // prompt cleanup of dead checkpoint blocks (see Bench.scala, r18)
-      .config("spark.cleaner.periodicGC.interval", "45s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // streaming throughput probe is its own mode: `stream [sfDir]`

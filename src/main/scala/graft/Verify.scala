@@ -1,47 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-      // TIMESTAMP (UTC session) like every engine-side consumer expects
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // reference semantics are pre-ANSI PySpark: junk casts/parses → null
-      .config("spark.sql.ansi.enabled", "false")
-      // plain int64 micros so the driver's DuckDB/pyarrow compare reads
-      // timestamps without INT96 legacy handling
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: the default 100-entry codegen cache cannot hold a 360-query
-      // registry — every bench rep re-ran Janino compilation for every
-      // query (q101 spent ~3 s/rep compiling; back-to-back reps with a
-      // warm cache ran the same query in 0.6 s). A warm session keeps
-      // its compiled code; entries are weak-referenced classes, ~tens
-      // of KB each. Static conf — must be set before session start.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // prompt cleanup of dead checkpoint blocks (see Bench.scala — the
-      // r18 block-churn fix; Verify runs the same 360 pipelines)
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
+    // plain int64 micros so the DuckDB/pyarrow oracle compare reads
+    // timestamps without INT96 legacy handling
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
-    // the allowlisted bounded partitionless windows (≤nBuckets /
-    // calendar / value-domain frames) each WARN "No Partition Defined…
-    // moving all data to a single partition"; at 322 queries that
-    // floods the driver's stderr tail and buries any REAL new warning
-    // (VERDICT r13). The plan lint polices the window shape properly —
-    // silence only this logger, not WARN at large.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietWindowWarnings()
     new java.io.File(outDir).mkdirs()
     // dev-only focused runs (tools/check_oracle.py pre-flight): unset —
     // the driver's path — dumps every query

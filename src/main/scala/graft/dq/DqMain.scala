@@ -1,8 +1,8 @@
 package graft.dq
 
-import graft.etl.{EtlConfig, EtlMain, HadoopIo, RunLog}
+import graft.etl.{EtlConfig, EtlMain, HadoopIo, RunLog, Sinks}
 import graft.sources.Readers
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The DQ runner (SURVEY.md §3.2) as a plain main — the engine-side
   * replacement for `python i94_data_quality_check.py` + its Airflow
@@ -19,6 +19,17 @@ import org.apache.spark.sql.SparkSession
   */
 object DqMain {
 
+  /** A registry table in its written format (a parquet probe of a CSV
+    * table aborts a Spark job on the footer read); any other name by
+    * probing parquet, then CSV.
+    */
+  private def read(spark: SparkSession, dataDir: String, table: String): DataFrame =
+    Sinks.registry.find(_.name == table) match {
+      case Some(spec) if spec.format == Sinks.Csv => Sinks.readTable(spark, spec, dataDir)
+      case Some(_) => spark.read.parquet(s"$dataDir/$table")
+      case None => Readers.parquetOrCsv(spark, s"$dataDir/$table")
+    }
+
   /** Run the checks for (table, keyCols) specs against `dataDir`. */
   def runChecks(spark: SparkSession, dataDir: String,
       specs: Seq[(String, Seq[String])],
@@ -30,7 +41,7 @@ object DqMain {
       if (!HadoopIo.exists(spark, path)) {
         DataQuality.DqReport(table, 0, nonEmpty = false, Nil)
       } else {
-        DataQuality.check(table, Readers.parquetOrCsv(spark, path), keys)
+        DataQuality.check(table, read(spark, dataDir, table), keys)
       }
     }
     reports.foreach { r =>

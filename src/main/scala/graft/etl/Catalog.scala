@@ -22,15 +22,7 @@ object Catalog {
     * between sessions).
     */
   def builder(warehouseDir: String, cpus: Int): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-      // TIMESTAMP (UTC session) like every engine-side consumer expects
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    graft.GraftSession.builder(cpus)
       .config("spark.sql.warehouse.dir", s"$warehouseDir/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$warehouseDir/metastore_db;create=true")

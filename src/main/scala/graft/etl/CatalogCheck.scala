@@ -18,8 +18,7 @@ object CatalogCheck {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: CatalogCheck write|read <warehouseDir> <arg>")
     val Array(phase, warehouseDir, arg) = args
-    val spark = Catalog.builder(warehouseDir,
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
+    val spark = Catalog.builder(warehouseDir, graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     phase match {
       case "write" =>

@@ -51,19 +51,7 @@ object EtlMain {
         throw new IllegalArgumentException("--config <file> is required with flag usage")))
     }
 
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-      // TIMESTAMP (UTC session) like every engine-side consumer expects
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private[graft] def session(): SparkSession = graft.GraftSession.builder().getOrCreate()
 
   /** Config-driven run: read every input named by the config, skip missing
     * monthly files (the reference's monthly-loop semantics, etl.py:736-748),

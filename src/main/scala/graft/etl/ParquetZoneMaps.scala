@@ -61,20 +61,29 @@ private[etl] final case class ChunkBinRange(min: Array[Byte],
   */
 object ParquetZoneMaps {
 
-  /** Recursive data-file listing under `path` (parquet parts only; no
-    * `_SUCCESS`/hidden paths) — the same O(files) driver-side walk
-    * Spark's own InMemoryFileIndex performs. Shared by the footer jobs
-    * and [[ZoneMapReader]]'s kept-vs-total accounting.
+  /** Recursive data-file listing under `path` (parquet parts only) — the
+    * same O(files) driver-side walk Spark's own InMemoryFileIndex
+    * performs, with its hidden-name rule (`.x`, and `_x` unless a
+    * `k=v` partition) applied only to the components below `path`, so a
+    * table that itself lives under a dot-directory still lists. Shared
+    * by the footer jobs and [[ZoneMapReader]]'s kept-vs-total accounting.
     */
   private[graft] def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
+    val rootDepth = fs.makeQualified(root).depth()
     val it = fs.listFiles(root, true)
+    def hidden(p: org.apache.hadoop.fs.Path): Boolean =
+      p.depth() > rootDepth && {
+        val n = p.getName
+        n.startsWith(".") || n.startsWith("_") && !n.contains("=") ||
+          hidden(p.getParent)
+      }
     Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath.toString)
-      .filter(f => f.endsWith(".parquet") || f.contains("part-"))
-      .filterNot(f => f.contains("_SUCCESS") || f.contains("/."))
+      .takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") || p.getName.contains("part-"))
+      .filterNot(hidden).map(_.toString)
       .toSeq.sorted
   }
 

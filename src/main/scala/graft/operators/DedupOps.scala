@@ -123,7 +123,7 @@ object DedupOps {
     // only doc ids and Jaccard values, never the key, and every consumer
     // is still gated against the string-keyed DuckDB oracles (identical
     // results absent a collision). Local honesty note: an interleaved
-    // same-JVM A/B at sf0.1 (ScratchAB) put the join section at 1.08s
+    // same-JVM A/B at sf0.1 put the join section at 1.08s
     // hashed vs 1.12s string — parity locally, where tokenization
     // dominates; the narrowing is for shuffle BYTES at cluster scale,
     // where the three key-bearing exchanges dominate. The uncapped STRING

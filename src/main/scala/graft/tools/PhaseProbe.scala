@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement tool (guide §1): reproduce the full-registry bench
   * context (every query executed once, session caches warm, block
   * store populated exactly as the bench's rep-1 leaves it), then for a
@@ -23,23 +21,7 @@ object PhaseProbe {
       .getOrElse(Seq("q100_dup_inflation", "q101_ann_recall",
         "q102_hamming_topk", "q103_funnel", "q104_cohort_retention"))
     val skipWarm = args.lift(2).contains("skipWarm")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: the default 100-entry codegen cache cannot hold a 360-query
-      // registry — every bench rep re-ran Janino compilation for every
-      // query (q101 spent ~3 s/rep compiling; back-to-back reps with a
-      // warm cache ran the same query in 0.6 s). A warm session keeps
-      // its compiled code; entries are weak-referenced classes, ~tens
-      // of KB each. Static conf — must be set before session start.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def census(tag: String): Unit = {

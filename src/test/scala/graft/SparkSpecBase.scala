@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (UTC, ANSI off — the
-  * reference's pre-ANSI null-on-junk semantics).
+/** One shared local session for all suites: GraftSession's settings at
+  * 4 cores, so the specs check the session the mains run.
   */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -12,15 +12,6 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // testdata parquet marks timestamps isAdjustedToUTC=false; read them as
-    // TIMESTAMP (UTC session) like every engine-side consumer expects
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession.builder(4).appName("graft-tests").getOrCreate()
 }

@@ -265,4 +265,26 @@ class ZoneMapReaderSpec extends SparkSpecBase {
     assert(pr.df.count() === 0L)
     assert(pr.df.columns.toSeq === Seq("k"))
   }
+
+  test("a table under a dot-directory still lists and prunes; hidden names below it do not list") {
+    val out = Files.createTempDirectory("graft-zmr-dot").toString + "/.runs/out"
+    val spec = Sinks.TableSpec("zr_d", Sinks.Parquet,
+      sortCols = Seq("k"), layoutFiles = 4)
+    Sinks.write(spark.range(400).select(col("id").as("k")), spec, out)
+    val parts = new java.io.File(s"$out/zr_d").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length >= 4)
+    // a hidden copy and a `_`-prefixed staging dir below the table root
+    // are not table data
+    Files.copy(parts.head.toPath, new java.io.File(s"$out/zr_d/.${parts.head.getName}").toPath)
+    new java.io.File(s"$out/zr_d/_staging").mkdir()
+    Files.copy(parts.head.toPath, new java.io.File(s"$out/zr_d/_staging/${parts.head.getName}").toPath)
+    val listed = ParquetZoneMaps.listDataFiles(spark, s"$out/zr_d")
+    assert(listed.map(p => new org.apache.hadoop.fs.Path(p).getName).sorted ===
+      parts.map(_.getName).toSeq.sorted)
+    val pr = ZoneMapReader.readRange(spark, spec, out, "k", 10L, 20L)
+    assert(pr.filesTotal === parts.length)
+    assert(pr.filesKept === 1)
+    assert(pr.df.count() === 11L)
+  }
 }

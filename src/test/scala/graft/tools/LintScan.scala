@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{PlanLint, SparkEntry}
-import org.apache.spark.sql.SparkSession
 
 /** Dev scan behind PlanLintSpec's allowlist: walk every registry
   * query's pre-AQE plan on sf0.001 and print the scale-killer shapes
@@ -9,13 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object LintScan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
