@@ -456,6 +456,13 @@ object Bench {
     val cacheDelta = graft.operators.SessionCaches.telemetry - cacheT0
     val cacheStats = CacheStats(cacheDelta.admissions,
       cacheDelta.evictions, cacheDelta.rebuilds, rebuildsByQuery.toMap)
+    // end-of-run census of the reps' block store, taken before the
+    // standalone pass clears every session cache
+    val endInfos =
+      try spark.sparkContext.getRDDStorageInfo catch { case _: Throwable => Array.empty[org.apache.spark.storage.RDDInfo] }
+    val storageStats = StorageStats(peakMem / (1024 * 1024), peakRdds,
+      endInfos.map(i => i.memSize + i.diskSize).sum / (1024 * 1024),
+      endInfos.length)
     // standalone pass (VERDICT r17 item 2): for every cache-building
     // first-toucher, clear ALL session caches and run the query once —
     // a per-query time whose work is entirely its own, alongside the
@@ -475,11 +482,6 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         name -> (if (ok) dt else -dt)
       }.toMap
-    val endInfos =
-      try spark.sparkContext.getRDDStorageInfo catch { case _: Throwable => Array.empty[org.apache.spark.storage.RDDInfo] }
-    val storageStats = StorageStats(peakMem / (1024 * 1024), peakRdds,
-      endInfos.map(i => i.memSize + i.diskSize).sum / (1024 * 1024),
-      endInfos.length)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val flaky = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = names.map { name =>

@@ -29,14 +29,21 @@ object DataQuality {
     */
   def nullKeys(df: DataFrame, cols: Seq[String]): Seq[NullKeyResult] = {
     if (cols.isEmpty) return Nil
+    val aggs = nullCounts(df, cols)
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    cols.zipWithIndex.map { case (c, i) => NullKeyResult(c, row.getLong(i)) }
+  }
+
+  /** One null-count aggregate per key column, named after it; NaN counts
+    * as null on numeric columns only.
+    */
+  private def nullCounts(df: DataFrame, cols: Seq[String]): Seq[Column] = {
     val numeric = df.schema.fields
       .filter(f => f.dataType.isInstanceOf[NumericType]).map(_.name).toSet
-    val aggs = cols.map { c =>
+    cols.map { c =>
       val pred = if (numeric(c)) col(c).isNull || isnan(col(c)) else col(c).isNull
       count(when(pred, lit(1))).as(c)
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cols.zipWithIndex.map { case (c, i) => NullKeyResult(c, row.getLong(i)) }
   }
 
   /** Referential-integrity extension (SURVEY.md §2.4): count fact keys
@@ -48,10 +55,14 @@ object DataQuality {
       .join(dim, fact(factKey) === dim(dimKey), "left_anti")
       .count()
 
-  /** Full per-table report: one pass for null keys, one count. */
+  /** Full per-table report: the row count and the null keys in one
+    * aggregate, so one pass over the table.
+    */
   def check(table: String, df: DataFrame, keyCols: Seq[String]): DqReport = {
-    val n = df.count()
-    DqReport(table, n, n > 0, nullKeys(df, keyCols))
+    val row = df.agg(count(lit(1)), nullCounts(df, keyCols): _*).collect()(0)
+    val n = row.getLong(0)
+    DqReport(table, n, n > 0,
+      keyCols.zipWithIndex.map { case (c, i) => NullKeyResult(c, row.getLong(i + 1)) })
   }
 
   /** Schema-wide referential-integrity profile (q125): one row per FK
@@ -176,14 +187,9 @@ object DataQuality {
   def observedNullCounts(df: DataFrame,
       cols: Seq[String]): (org.apache.spark.sql.Observation, DataFrame) = {
     require(cols.nonEmpty, "observe at least one column")
-    val numeric = df.schema.fields
-      .filter(f => f.dataType.isInstanceOf[NumericType]).map(_.name).toSet
     val obs = org.apache.spark.sql.Observation()
-    val metrics = count(lit(1)).as("rows") +: cols.map { c =>
-      val pred = if (numeric(c)) col(c).isNull || isnan(col(c)) else col(c).isNull
-      count(when(pred, lit(1))).as(s"null_$c")
-    }
-    (obs, df.observe(obs, metrics.head, metrics.tail: _*))
+    val nulls = nullCounts(df, cols).zip(cols).map { case (n, c) => n.as(s"null_$c") }
+    (obs, df.observe(obs, count(lit(1)).as("rows"), nulls: _*))
   }
 
   /** Deletion-propagation audit (q250): given a deletion cohort

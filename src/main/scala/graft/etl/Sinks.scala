@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.operators.MidFrames._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 
 /** Write-side registry (SURVEY.md §2.2 K1-K4): each output table routed to
   * its format / partitioning / mode, mirroring the reference's dispatch
@@ -399,7 +399,15 @@ object Sinks {
     n
   }
 
-  def write(df: DataFrame, spec: TableSpec, outputDir: String): Unit = {
+  /** Writes `df` through the spec's layout and returns the number of
+    * rows this write wrote (in append mode: this write's rows, not the
+    * table's). The count is observed on the frame the writer consumes,
+    * so it costs no second job. It sits above [[applyLayout]]: the
+    * range-repartition's sampling job runs the plan below the layout,
+    * and an observation there would see that extra run too.
+    */
+  def write(df: DataFrame, spec: TableSpec, outputDir: String): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
     val mode = if (spec.overwrite) "overwrite" else "append"
     val path0 = s"$outputDir/${spec.name}"
     // append-mode schema gate (WRITE_CONTRACT.md §4): parquet append
@@ -424,11 +432,14 @@ object Sinks {
             "schema exactly; evolve via mergeInto(evolveSchema = true)")
       }
     }
-    val w0 = applyLayout(df, spec).write.option("header", "true").mode(mode)
+    val rows = Observation()
+    val w0 = applyLayout(df, spec).observe(rows, count(lit(1)).as("rows"))
+      .write.option("header", "true").mode(mode)
     val w = if (spec.partitionCols.nonEmpty) w0.partitionBy(spec.partitionCols: _*) else w0
     spec.format match {
       case Parquet => w.parquet(path0)
       case Csv     => w.csv(path0)
     }
+    rows.get("rows").asInstanceOf[Long]
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,41 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` under job group `group` and returns its result, the ids
+    * of the jobs it started and of those that did not succeed, as a
+    * listener saw them.
+    */
+  def jobsOf[T](group: String)(body: => T): (T, Set[Int], Set[Int]) = {
+    import org.apache.spark.scheduler._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.add(e.jobId)
+          case Some("jobs-of-sentinel") => sentinel.countDown()
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (started.contains(e.jobId) && e.jobResult != JobSucceeded) failed.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      val result = body
+      // the bus delivers in order: once the sentinel job's start arrives,
+      // every job `body` started has ended
+      spark.sparkContext.setJobGroup("jobs-of-sentinel", "sentinel")
+      spark.range(1).count()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (result, Set.from(started.asScala), Set.from(failed.asScala))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpecBase {

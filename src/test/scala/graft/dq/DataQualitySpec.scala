@@ -24,6 +24,22 @@ class DataQualitySpec extends SparkSpecBase {
     assert(!rep.passed && rep.rowCount === 0)
   }
 
+  test("check counts rows and null keys in one aggregate") {
+    import org.apache.spark.sql.functions.{count, lit}
+    import DataQuality.{DqReport, NullKeyResult}
+    val dir = java.nio.file.Files.createTempDirectory("graft-dq-jobs").toString + "/t"
+    Seq[(java.lang.Long, java.lang.Double, String)](
+      (1L, 1.5, "a"), (null, Double.NaN, "b"), (3L, null, null), (4L, 2.5, "d"))
+      .toDF("k", "v", "s").repartition(2).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val (_, oneAggregate, _) = jobsOf("dq-jobs-agg")(df.agg(count(lit(1))).collect())
+    val (rep, checked, _) = jobsOf("dq-jobs-check")(DataQuality.check("t", df, Seq("k", "v", "s")))
+    assert(oneAggregate.nonEmpty && checked.size === oneAggregate.size)
+    assert(rep === DqReport("t", 4, nonEmpty = true,
+      Seq(NullKeyResult("k", 1), NullKeyResult("v", 2), NullKeyResult("s", 1))))
+    assert(DataQuality.check("t", df, Nil) === DqReport("t", 4, nonEmpty = true, Nil))
+  }
+
   test("fk violations via left_anti: trips keys missing from countries dim") {
     val trips = RefBuilders.i94Trips(spark, Fixtures.rawI94(spark))
     val countries = Seq(("101", "ALBANIA"), ("102", "FRANCE"))

@@ -109,38 +109,11 @@ class ConfigRunSpec extends SparkSpecBase {
     spark.createDataFrame(Seq(("1", "Business"), ("2", "Pleasure")))
       .toDF("visa_id", "visa_purpose")
       .write.option("header", "true").csv(s"$dir/i94_visa")
-    val group = "dq-csv-read"
-    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val failed = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => ours.add(e.jobId)
-          case Some("dq-csv-sentinel") => sentinel.countDown()
-          case _ =>
-        }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (ours.contains(e.jobId) &&
-            e.jobResult != org.apache.spark.scheduler.JobSucceeded)
-          failed.incrementAndGet()
+    val (reports, ours, failed) = jobsOf("dq-csv-read") {
+      graft.dq.DqMain.runChecks(spark, dir, Seq("i94_visa" -> Seq("visa_id")), _ => ())
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, group)
-      val reports = graft.dq.DqMain.runChecks(spark, dir,
-        Seq("i94_visa" -> Seq("visa_id")), _ => ())
-      // the bus delivers in order: once the sentinel job's start arrives,
-      // every runChecks job has ended
-      spark.sparkContext.setJobGroup("dq-csv-sentinel", "sentinel")
-      spark.range(1).count()
-      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(reports.map(r => (r.passed, r.rowCount)) === Seq((true, 2L)))
-      assert(!ours.isEmpty, "runChecks ran no job in its group")
-      assert(failed.get === 0)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    assert(reports.map(r => (r.passed, r.rowCount)) === Seq((true, 2L)))
+    assert(ours.nonEmpty, "runChecks ran no job in its group")
+    assert(failed.isEmpty)
   }
 }

@@ -15,6 +15,11 @@ class EtlPipelineSpec extends SparkSpecBase {
       out)
     assert(res.rowCounts.keySet === Sinks.registry.map(_.name).toSet)
     assert(res.rowCounts.values.forall(_ > 0))
+    // each count is the rows its own write wrote (i94_trips included:
+    // its range layout's sampling job must not count twice)
+    Sinks.registry.foreach { spec =>
+      assert(res.rowCounts(spec.name) === Sinks.readTable(spark, spec, out).count(), spec.name)
+    }
     // partitioned parquet tables have Hive-style partition dirs
     val tripsDirs = new java.io.File(s"$out/i94_trips").list().toSeq
     assert(tripsDirs.exists(_.startsWith("i94_year=2016")))
@@ -42,6 +47,32 @@ class EtlPipelineSpec extends SparkSpecBase {
         assert(a._2 <= b._1, s"overlapping file date ranges $a vs $b")
       case _ => ()
     }
+  }
+
+  test("one failed write fails the run after the others finish, and leaks nothing") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft-etl-fail").toString
+    // only i94_airports reads the airports frame; its write fails in a task
+    val airports = Fixtures.airports(spark).withColumn("name",
+      raise_error(concat(lit("injected failure at "), col("ident"))).cast("string"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val run = Future(EtlPipeline.runAll(spark, Seq(Fixtures.rawI94(spark)), airports,
+      Fixtures.demographics(spark), Fixtures.dictionary, out))(ExecutionContext.global)
+    val err = intercept[Exception](Await.result(run, 5.minutes))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected failure at")), err)
+    // every other write finished before the failure was rethrown
+    Sinks.registry.filter(_.name != "i94_airports").foreach { spec =>
+      assert(new java.io.File(s"$out/${spec.name}/_SUCCESS").exists, spec.name)
+    }
+    assert(!new java.io.File(s"$out/i94_airports/_SUCCESS").exists)
+    // raw and trips are unpersisted, and the write pool is gone
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(cachedBefore))
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName.startsWith("etl-write-") && t.isAlive))
   }
 
   test("union-by-name concat tolerates column order differences") {

@@ -12,12 +12,13 @@ class SinksSpec extends SparkSpecBase {
     val spec = Sinks.TableSpec("i94_trips", Sinks.Parquet,
       Seq("i94_year", "i94_month"), overwrite = true)
 
-    Sinks.write(t, spec, out)
-    val n1 = spark.read.parquet(s"$out/i94_trips").count()
+    val n1 = Sinks.write(t, spec, out)
+    assert(n1 > 0 && spark.read.parquet(s"$out/i94_trips").count() === n1)
 
-    // simulate next month's load: same rows shifted to month 5, append mode
+    // simulate next month's load: same rows shifted to month 5, append
+    // mode; the write reports its own rows, not the table's total
     val month5 = t.withColumn("i94_month", lit(5))
-    Sinks.write(month5, spec.copy(overwrite = false), out)
+    assert(Sinks.write(month5, spec.copy(overwrite = false), out) === n1)
 
     val all = spark.read.parquet(s"$out/i94_trips")
     assert(all.count() === n1 * 2)
