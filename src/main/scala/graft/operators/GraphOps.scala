@@ -271,11 +271,15 @@ object GraphOps {
   /** k-core peeling (q173): items surviving `peels` rounds of
     * remove-degree-<k over the co-occurrence graph, with their residual
     * degree — the dense-subgraph filter that strips hangers-on before
-    * community/recommender analysis. A FIXED peel count (not
-    * run-to-fixpoint) keeps the plan static and the oracle replayable;
-    * each round that removes nothing is a no-op, so on graphs that
-    * stabilize within `peels` rounds the result IS the exact k-core
-    * (the spec pins a fixture that needs cascading peels).
+    * community/recommender analysis. `peels` bounds the rounds, which
+    * keeps the oracle replayable as a fixed unrolled plan; the loop
+    * stops early at the first round that removes no edge. The stop is
+    * exact: a peel only drops rows, so an unchanged row count means an
+    * unchanged edge set, and every later round would be a no-op (the
+    * Batagelj–Zaversnik fixpoint). On graphs that stabilize within
+    * `peels` rounds the result IS the exact k-core (the spec pins a
+    * fixture that needs cascading peels, and one that needs more
+    * peels than it gets).
     *
     * Scale shape: per round, ONE degree aggregate over the surviving
     * edges and two semi-joins against the keep-set — all keyed on item
@@ -285,32 +289,51 @@ object GraphOps {
     * counting; (item) order is total.
     */
   def kCore(spark: SparkSession, dir: String, k: Int = 3, peels: Int = 4,
-      minSupport: Int = 5): DataFrame =
-    kCoreOnPairs(cachedCoPairs(spark, dir, minSupport), k, peels)
+      minSupport: Int = 5): DataFrame = {
+    // the session-cached grid is already persisted: peel it in place
+    val edges = cachedCoPairs(spark, dir, minSupport).select(col("i"), col("j"))
+    kCoreOnEdges(edges, edges.queryExecution.toRdd.count(), k, peels)
+  }
 
   private[graft] def kCoreOn(ev: DataFrame, k: Int = 3, peels: Int = 4,
       minSupport: Int = 5,
-      userItemCap: Int = EventOps.DefaultUserItemCap): DataFrame =
-    kCoreOnPairs(coPairsOn(ev, minSupport, userItemCap), k, peels)
+      userItemCap: Int = EventOps.DefaultUserItemCap): DataFrame = {
+    // spec path: the pairs are an unpersisted aggregate that the input
+    // count and the first peel both read, so checkpoint them once
+    val (edges, rows) = coPairsOn(ev, minSupport, userItemCap)
+      .select(col("i"), col("j")).midCpCounted()
+    kCoreOnEdges(edges, rows, k, peels)
+  }
 
-  private def kCoreOnPairs(pairs: DataFrame, k: Int, peels: Int): DataFrame = {
-    // (r17 A/B note: lazy per-round checkpoints measured SLOWER here —
-    // 3.29 → 3.62 s at 5-rep median: each round's edges has THREE
-    // consumers, and deferring materialization into one final job let
-    // concurrent stages race the block persist and recompute the
-    // chain. Eager — one job per peel, every consumer reads blocks —
-    // stays.)
-    var edges = pairs
-      .select(col("i"), col("j")).midCp()
-    (1 to peels).foreach { _ =>
+  /** Peels `edges0` (which holds `rows0` rows) until a round removes no
+    * edge or `peels` rounds have run.
+    */
+  private def kCoreOnEdges(edges0: DataFrame, rows0: Long, k: Int,
+      peels: Int): DataFrame = {
+    // Each peel's row count is the first consumer of its lazy
+    // checkpoint: that one job fills the blocks and decides the
+    // fixpoint, so the later consumers (the next round's two degree
+    // sides and its semi-join, or the final degree count) all read
+    // blocks. Left to a multi-consumer job instead, a lazy checkpoint
+    // is filled late by concurrent stages that race its block persist
+    // and recompute the chain (measured slower in r17).
+    var edges = edges0
+    var rows = rows0
+    var round = 0
+    var stable = rows == 0
+    while (round < peels && !stable) {
       val keep = edges.select(col("i").as("node"))
         .union(edges.select(col("j").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("node"))
-      edges = edges
+      val (peeled, left) = edges
         .join(keep.select(col("node").as("i")), Seq("i"), "left_semi")
         .join(keep.select(col("node").as("j")), Seq("j"), "left_semi")
-        .midCp()
+        .midCpCounted()
+      stable = left == rows
+      edges = peeled
+      rows = left
+      round += 1
     }
     edges.select(col("i").as("item"))
       .union(edges.select(col("j").as("item")))
@@ -651,8 +674,9 @@ object GraphOps {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-        .midCp() // eager: each lab has two consumers (trace +
-      // next round) — the q173 A/B showed lazy loses that race here
+        .midCp() // eager: each lab has two consumers (the trace and
+      // the next round); a lazy checkpoint would leave both to race
+      // its block persist inside the final union job
       out = out.unionByName(trace(r, lab))
     }
     out.orderBy(col("round"))

@@ -57,8 +57,9 @@ private[graft] object SessionCaches {
 
   /** LRU order over every live entry (access-ordered LinkedHashMap),
     * keyed by (owning map IDENTITY, key) — two empty cache maps are
-    * `equals` by content, so the owner must compare by reference. All
-    * access synchronized on the map itself.
+    * `equals` by content, so the owner must compare by reference; the
+    * value is the entry's hit count since admission. All access
+    * synchronized on the map itself.
     */
   private final class EntryId(val owner: Cache[_ <: Product],
       val key: Product) {
@@ -70,7 +71,14 @@ private[graft] object SessionCaches {
       System.identityHashCode(owner) * 31 + key.hashCode
   }
   private val lru =
-    new java.util.LinkedHashMap[EntryId, Unit](16, 0.75f, true)
+    new java.util.LinkedHashMap[EntryId, Integer](16, 0.75f, true)
+
+  /** A hit re-checks the budget every `HitStride`-th time its entry is
+    * read: admission is not the only way over budget — an entry
+    * admitted lazily gets its bytes at its first action, so a session
+    * that only hits could otherwise stay over budget for good.
+    */
+  private val HitStride = 32
 
   /** Create and enroll a session-keyed cache map. */
   def newCache[K <: Product](): Cache[K] = {
@@ -244,15 +252,17 @@ private[graft] object SessionCaches {
         val prev = m.putIfAbsent(k, v)
         (if (prev != null) prev else v, true)
       }
-    // LRU touch on EVERY access (recency is usage, not creation); the
-    // budget check only on ADMISSION (r18): owned bytes only grow when
-    // an entry is added, while the check itself walks the context-wide
-    // RDD storage table — on the hit path that walk taxed every warm
-    // consumer of every cache with O(live blocks) driver work for a
-    // budget that could not have changed. An admitted-lazy entry whose
-    // bytes land at its first action is caught at the next admission.
-    lru.synchronized { lru.put(id, ()) }
-    if (admitted) evictOverBudget(spark, id)
+    // LRU touch on EVERY access (recency is usage, not creation). The
+    // budget check walks the context-wide RDD storage table (driver
+    // work only, no job); run on every hit, that walk taxed each warm
+    // consumer of each cache (r18), so hits run it every HitStride-th
+    // time.
+    val hits = lru.synchronized {
+      val n = if (admitted) 0 else lru.getOrDefault(id, 0) + 1
+      lru.put(id, n)
+      n
+    }
+    if (admitted || hits % HitStride == 0) evictOverBudget(spark, id)
     result
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpecBase {
@@ -71,12 +72,14 @@ class GraphOpsSpec extends SparkSpecBase {
     * user per edge, minSupport=1. Triangles: (1,2,3) and (1,2,4).
     * Degrees: 1→3, 2→3, 3→2, 4→2.
     */
-  private def diamondGraphEvents = {
-    val edges = Seq((1, 2), (1, 3), (2, 3), (1, 4), (2, 4))
+  private def diamondGraphEvents =
+    edgeEvents(Seq((1, 2), (1, 3), (2, 3), (1, 4), (2, 4)))
+
+  /** One dedicated user per edge, so minSupport=1 keeps every edge. */
+  private def edgeEvents(edges: Seq[(Int, Int)]) =
     edges.zipWithIndex.flatMap { case ((i, j), u) =>
       Seq((u.toLong, s"""{"k": $i}"""), (u.toLong, s"""{"k": $j}"""))
     }.toDF("user_id", "props")
-  }
 
   test("triangles: degree-ordered counting matches hand enumeration") {
     val got = GraphOps.triangleCountOn(diamondGraphEvents, minSupport = 1)
@@ -134,5 +137,99 @@ class GraphOpsSpec extends SparkSpecBase {
       case _ => ()
     }
     out.unpersist()
+  }
+
+  /** Triangle {1,2,3} with a pendant path 3–4–5. */
+  private def triangleTailEvents =
+    edgeEvents(Seq((1, 2), (2, 3), (1, 3), (3, 4), (4, 5)))
+
+  /** Triangle {1,2,3} with a pendant path 3–4–5–6–7–8: five peels at
+    * k=2 to reach the triangle.
+    */
+  private def triangleLongTailEvents =
+    edgeEvents(Seq((1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 7),
+      (7, 8)))
+
+  /** K6: every degree is 5, so at k=3 the first peel removes nothing. */
+  private def k6Events =
+    edgeEvents(for (i <- 1 to 6; j <- i + 1 to 6) yield (i, j))
+
+  private def kCoreRows(df: DataFrame): Seq[(Int, Long)] =
+    df.as[(Int, Long)].collect().toSeq
+
+  /** Reference: the fixed-peel loop that runs every one of the `peels`
+    * rounds, whatever each removes.
+    */
+  private def fixedPeelKCore(ev: DataFrame, k: Int, peels: Int,
+      minSupport: Int): Seq[(Int, Long)] = {
+    var edges = GraphOps.coPairsOn(ev, minSupport, EventOps.DefaultUserItemCap)
+      .select(col("i"), col("j")).localCheckpoint()
+    (1 to peels).foreach { _ =>
+      val keep = edges.select(col("i").as("node"))
+        .union(edges.select(col("j").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= k).select(col("node"))
+      edges = edges
+        .join(keep.select(col("node").as("i")), Seq("i"), "left_semi")
+        .join(keep.select(col("node").as("j")), Seq("j"), "left_semi")
+        .localCheckpoint()
+    }
+    kCoreRows(edges.select(col("i").as("item"))
+      .union(edges.select(col("j").as("item")))
+      .groupBy(col("item")).agg(count(lit(1)).as("core_degree"))
+      .orderBy(col("item")))
+  }
+
+  test("kCore: pendant path peels away only with cascading rounds") {
+    // peel 1 removes leaf 5 (deg 1); node 4 only drops to deg 1 AFTER
+    // that, so it needs peel 2 — a fixed single peel must retain it
+    val one = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 1,
+      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(one.map(_._1).toSet === Set(1, 2, 3, 4))
+    val two = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 2,
+      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(two.toSeq === Seq((1, 2L), (2, 2L), (3, 2L)))
+    // further peels are no-ops once stable
+    val four = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 4,
+      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(four.toSeq === two.toSeq)
+  }
+
+  test("kCore: stopping at the fixpoint matches the fixed-peel loop") {
+    val cases = Seq(
+      ("K6, stable after one peel", k6Events, 3, 4, 1),
+      ("triangle + tail, 1 peel", triangleTailEvents, 2, 1, 1),
+      ("triangle + tail, 2 peels", triangleTailEvents, 2, 2, 1),
+      ("triangle + tail, 4 peels", triangleTailEvents, 2, 4, 1),
+      ("tail longer than peels", triangleLongTailEvents, 2, 2, 1),
+      // every pair has support 1, below minSupport=2
+      ("empty edge set", triangleTailEvents, 2, 4, 2))
+    cases.foreach { case (name, ev, k, peels, minSupport) =>
+      assert(kCoreRows(GraphOps.kCoreOn(ev, k = k, peels = peels,
+        minSupport = minSupport)) === fixedPeelKCore(ev, k, peels,
+        minSupport), name)
+    }
+    assert(kCoreRows(GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 4,
+      minSupport = 2)) === Seq.empty)
+    assert(kCoreRows(GraphOps.kCoreOn(k6Events, k = 3, peels = 4,
+      minSupport = 1)) === (1 to 6).map(i => (i, 5L)))
+    // peels bounds the rounds: two peels strip only (7,8) and (6,7),
+    // not the fixpoint's triangle
+    assert(kCoreRows(GraphOps.kCoreOn(triangleLongTailEvents, k = 2,
+      peels = 2, minSupport = 1)) ===
+      Seq((1, 2L), (2, 2L), (3, 3L), (4, 2L), (5, 2L), (6, 1L)))
+  }
+
+  test("kCore: peels after the fixpoint start no jobs") {
+    def run(peels: Int) = jobsOf(s"kcore-peels-$peels") {
+      kCoreRows(GraphOps.kCoreOn(k6Events, k = 3, peels = peels,
+        minSupport = 1))
+    }
+    val (one, jobsOne, failedOne) = run(1)
+    val (four, jobsFour, failedFour) = run(4)
+    assert(four === one)
+    assert(failedOne.isEmpty && failedFour.isEmpty)
+    assert(jobsFour.size === jobsOne.size,
+      s"peels=4 started ${jobsFour.size} jobs, peels=1 ${jobsOne.size}")
   }
 }

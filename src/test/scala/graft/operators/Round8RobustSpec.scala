@@ -3,35 +3,11 @@ package graft.operators
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** Round-8 robust/graph/session batch: k-core peeling (q173), session
-  * stats (q174), exact median/MAD outliers (q175).
+/** Round-8 robust/session batch: session stats (q174), exact
+  * median/MAD outliers (q175).
   */
 class Round8RobustSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** Triangle {1,2,3} with a pendant path 3–4–5; every edge from one
-    * dedicated user so minSupport=1 keeps all of them.
-    */
-  private def triangleTailEvents = Seq(
-    (1L, 1), (1L, 2), (2L, 2), (2L, 3), (3L, 1), (3L, 3),
-    (4L, 3), (4L, 4), (5L, 4), (5L, 5))
-    .map { case (u, k) => (u, s"""{"k": $k}""") }
-    .toDF("user_id", "props")
-
-  test("kCore: pendant path peels away only with cascading rounds") {
-    // peel 1 removes leaf 5 (deg 1); node 4 only drops to deg 1 AFTER
-    // that, so it needs peel 2 — a fixed single peel must retain it
-    val one = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 1,
-      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
-    assert(one.map(_._1).toSet === Set(1, 2, 3, 4))
-    val two = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 2,
-      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
-    assert(two.toSeq === Seq((1, 2L), (2, 2L), (3, 2L)))
-    // further peels are no-ops once stable
-    val four = GraphOps.kCoreOn(triangleTailEvents, k = 2, peels = 4,
-      minSupport = 1).collect().map(r => (r.getInt(0), r.getLong(1)))
-    assert(four.toSeq === two.toSeq)
-  }
 
   test("sessionsOn: durations and bands on a constructed timeline") {
     def ts(min: Long) = new java.sql.Timestamp(min * 60000L)

@@ -154,4 +154,33 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       SessionCaches.clear(s2)
     }
   }
+
+  test("a session that only hits is brought back under budget within 32 hits") {
+    val s = spark.newSession()
+    val m = SessionCaches.newCache[(org.apache.spark.sql.SparkSession, String)]()
+    // lazy builds: both entries pass their admission check at 0 bytes
+    def lazyBuild(name: String, mult: Int): DataFrame =
+      s.range(1000).select(col("id"), (col("id") * mult).as(name)).persist()
+    SessionCaches.budgetOverride.set(1L)
+    try {
+      val a = SessionCaches.cached(m, (s, "a"))(lazyBuild("a", 2))
+      val b = SessionCaches.cached(m, (s, "b"))(lazyBuild("b", 3))
+      assert(SessionCaches.entryCount(s) === 2)
+      // materialized after admission: the session is now over budget
+      assert(a.count() === 1000L && b.count() === 1000L)
+      val (_, jobs, _) = jobsOf("budget-hits") {
+        (1 to 32).foreach { _ =>
+          SessionCaches.cached(m, (s, "b"))(fail("b was admitted already"))
+        }
+      }
+      assert(jobs.isEmpty, "the budget check must start no Spark job")
+      assert(SessionCaches.entryCount(s) === 1)
+      assert(a.storageLevel === StorageLevel.NONE,
+        "the LRU entry should be evicted by a hit-path budget check")
+      assert(b.storageLevel !== StorageLevel.NONE)
+    } finally {
+      SessionCaches.budgetOverride.remove()
+      SessionCaches.clear(s)
+    }
+  }
 }
