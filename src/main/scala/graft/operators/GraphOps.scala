@@ -273,72 +273,64 @@ object GraphOps {
     * degree — the dense-subgraph filter that strips hangers-on before
     * community/recommender analysis. `peels` bounds the rounds, which
     * keeps the oracle replayable as a fixed unrolled plan; the loop
-    * stops early at the first round that removes no edge. The stop is
-    * exact: a peel only drops rows, so an unchanged row count means an
-    * unchanged edge set, and every later round would be a no-op (the
-    * Batagelj–Zaversnik fixpoint). On graphs that stabilize within
-    * `peels` rounds the result IS the exact k-core (the spec pins a
-    * fixture that needs cascading peels, and one that needs more
-    * peels than it gets).
+    * stops early once no node has degree < k, because from there every
+    * further peel is a no-op (the Batagelj–Zaversnik fixpoint). On
+    * graphs that stabilize within `peels` rounds the result IS the
+    * exact k-core (the spec pins a fixture that needs cascading peels,
+    * and one that needs more peels than it gets).
     *
     * Scale shape: per round, ONE degree aggregate over the surviving
-    * edges and two semi-joins against the keep-set — all keyed on item
-    * ids; `localCheckpoint` cuts the per-round lineage (the q53
-    * iteration rule). The edge relation itself rides the capped grid
-    * ([[coPairsOn]]), so no hot user inflates any round. Pure integer
-    * counting; (item) order is total.
+    * edges and, only when a node falls below k, two semi-joins against
+    * the keep-set — all keyed on item ids; `localCheckpoint` cuts the
+    * per-round lineage (the q53 iteration rule). The edge relation
+    * itself rides the capped grid ([[coPairsOn]]), so no hot user
+    * inflates any round. Pure integer counting; (item) order is total.
     */
   def kCore(spark: SparkSession, dir: String, k: Int = 3, peels: Int = 4,
-      minSupport: Int = 5): DataFrame = {
+      minSupport: Int = 5): DataFrame =
     // the session-cached grid is already persisted: peel it in place
-    val edges = cachedCoPairs(spark, dir, minSupport).select(col("i"), col("j"))
-    kCoreOnEdges(edges, edges.queryExecution.toRdd.count(), k, peels)
-  }
+    kCoreOnEdges(cachedCoPairs(spark, dir, minSupport)
+      .select(col("i"), col("j")), k, peels)
 
   private[graft] def kCoreOn(ev: DataFrame, k: Int = 3, peels: Int = 4,
       minSupport: Int = 5,
-      userItemCap: Int = EventOps.DefaultUserItemCap): DataFrame = {
-    // spec path: the pairs are an unpersisted aggregate that the input
-    // count and the first peel both read, so checkpoint them once
-    val (edges, rows) = coPairsOn(ev, minSupport, userItemCap)
-      .select(col("i"), col("j")).midCpCounted()
-    kCoreOnEdges(edges, rows, k, peels)
-  }
+      userItemCap: Int = EventOps.DefaultUserItemCap): DataFrame =
+    // spec path: the pairs are an unpersisted aggregate that the first
+    // degree aggregate and the first peel both read, so checkpoint them
+    kCoreOnEdges(coPairsOn(ev, minSupport, userItemCap)
+      .select(col("i"), col("j")).midCp(), k, peels)
 
-  /** Peels `edges0` (which holds `rows0` rows) until a round removes no
-    * edge or `peels` rounds have run.
+  /** Peels `edges` until no node has degree < k or `peels` rounds have
+    * run, and returns the surviving degrees by item.
     */
-  private def kCoreOnEdges(edges0: DataFrame, rows0: Long, k: Int,
+  @annotation.tailrec
+  private def kCoreOnEdges(edges: DataFrame, k: Int,
       peels: Int): DataFrame = {
-    // Each peel's row count is the first consumer of its lazy
-    // checkpoint: that one job fills the blocks and decides the
-    // fixpoint, so the later consumers (the next round's two degree
-    // sides and its semi-join, or the final degree count) all read
-    // blocks. Left to a multi-consumer job instead, a lazy checkpoint
-    // is filled late by concurrent stages that race its block persist
-    // and recompute the chain (measured slower in r17).
-    var edges = edges0
-    var rows = rows0
-    var round = 0
-    var stable = rows == 0
-    while (round < peels && !stable) {
-      val keep = edges.select(col("i").as("node"))
-        .union(edges.select(col("j").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("node"))
-      val (peeled, left) = edges
-        .join(keep.select(col("node").as("i")), Seq("i"), "left_semi")
-        .join(keep.select(col("node").as("j")), Seq("j"), "left_semi")
-        .midCpCounted()
-      stable = left == rows
-      edges = peeled
-      rows = left
-      round += 1
-    }
-    edges.select(col("i").as("item"))
+    val degrees = edges.select(col("i").as("item"))
       .union(edges.select(col("j").as("item")))
       .groupBy(col("item")).agg(count(lit(1)).as("core_degree"))
-      .orderBy(col("item"))
+    if (peels == 0) degrees.orderBy(col("item"))
+    else {
+      // A zero low-degree count is exact: a peel drops an edge iff one
+      // of its endpoints has degree < k, and every endpoint of a
+      // surviving edge is a row of `deg`, so no such row means the peel
+      // would keep every edge and `deg` already is the answer. The count
+      // is the first consumer of the lazy checkpoint: that one job fills
+      // the blocks, so the answer (or the peel's keep-set) reads blocks.
+      // Left to a multi-consumer job instead, a lazy checkpoint is
+      // filled late by concurrent stages that race its block persist and
+      // recompute the chain (measured slower in r17).
+      val deg = degrees.midCp(eager = false)
+      if (deg.filter(col("core_degree") < k).queryExecution.toRdd.count() == 0)
+        deg.orderBy(col("item"))
+      else {
+        val keep = deg.filter(col("core_degree") >= k).select(col("item"))
+        kCoreOnEdges(edges
+            .join(keep.select(col("item").as("i")), Seq("i"), "left_semi")
+            .join(keep.select(col("item").as("j")), Seq("j"), "left_semi")
+            .midCp(), k, peels - 1)
+      }
+    }
   }
 
   /** Degree assortativity (q219): Pearson correlation of endpoint

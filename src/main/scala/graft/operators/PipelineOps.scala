@@ -272,14 +272,14 @@ object PipelineOps {
     * against the (huge) history shingle relation. The filter is built as
     * DataFrames end-to-end — no driver-side bitset, no UDF:
     *
-    *   - m = `bitsPerItem` × |distinct history shingles| (1-row broadcast
-    *     frame, same shape as the dedup df cap);
+    *   - m = `bitsPerItem` × |distinct history shingles|, a literal
+    *     read off the counted history checkpoint;
     *   - each shingle sets `k` positions `pmod(xxhash64(tok, seed), m)`;
     *     the distinct set-bit positions form a ≤ k·n-row LONG relation —
     *     the compressed stand-in for history (≈ 3 longs per item vs the
-    *     full string set), broadcast at test scale; at 100 TB drop the
-    *     broadcast hint and it shuffle-joins on `pos`, or shard the
-    *     filter by `pmod(pos, shards)`;
+    *     full string set), broadcast while that bound fits the session's
+    *     broadcast threshold and shuffle-joined on `pos` beyond it (at
+    *     100 TB, or shard the filter by `pmod(pos, shards)`);
     *   - a batch shingle is a member iff ALL k of its positions are set.
     *
     * Determinism: a Bloom bitset is the OR of per-item bit patterns, so
@@ -296,25 +296,33 @@ object PipelineOps {
   def bloomNovelty(spark: SparkSession, dir: String, k: Int = 3,
       bitsPerItem: Long = 16L, batchMod: Long = 5L): DataFrame = {
     val shingles = DedupOps.cachedDistinctShingles(spark, dir)
-    // hist feeds THREE consumers (the m-bits aggregate, the set-bit
-    // positions, the exact-membership truth join) — lazy checkpoint
-    // makes the filter+distinct one evaluation (r17, guide §2.4)
-    val hist = shingles.filter(pmod(col("doc_id"), lit(batchMod)) =!= 0)
-      .select(col("tok")).distinct().midCp(eager = false)
+    // hist feeds the set-bit positions and the exact-membership truth
+    // join; counting it fills its lazy checkpoint in the same job that
+    // sizes the filter, so m enters every plan as a literal instead of
+    // a 1-row aggregate crossed into both position frames. n = 0 gives
+    // m = 0, and pmod by zero makes every position null: nothing is set
+    // and nothing probes as a hit.
+    val (hist, n) = shingles.filter(pmod(col("doc_id"), lit(batchMod)) =!= 0)
+      .select(col("tok")).distinct().midCpCounted()
+    val m = bitsPerItem * n
     val batch = shingles.filter(pmod(col("doc_id"), lit(batchMod)) === 0)
       .select(col("doc_id"), col("tok"))
-    val mDf = broadcast(hist.agg((count(lit(1)) * bitsPerItem).as("m")))
     def positions(df: DataFrame, keep: Seq[String]): DataFrame =
-      df.crossJoin(mDf).select(keep.map(col) :+
+      df.select(keep.map(col) :+
         explode(array((0 until k).map(s =>
-          pmod(xxhash64(col("tok"), lit(s)), col("m"))): _*)).as("pos"): _*)
-    // no broadcast HINT on the set-bits side: AQE broadcasts it while it
-    // fits (it does at test scale — PlanSpec pins the BroadcastHashJoin)
-    // and degrades to a shuffle join on `pos` when a 100 TB history's
-    // filter outgrows the driver, instead of OOMing on a forced hint
+          pmod(xxhash64(col("tok"), lit(s)), lit(m))): _*)).as("pos"): _*)
+    // The set bits are at most k·n one-long rows (16 bytes each as
+    // UnsafeRows). While that bound fits the session's broadcast
+    // threshold the join is broadcast at planning time; left to AQE it
+    // became a broadcast only after the batch side's shuffle on `pos`
+    // was already written, and that shuffle was thrown away. Above the
+    // threshold the join is left to Spark, which shuffle-joins on `pos`
+    // instead of OOMing the driver on a forced hint.
     val setBits = positions(hist, Seq("tok")).select(col("pos")).distinct()
+      .withColumn("hit", lit(1))
+    val fits = k * n * 16L <= spark.sessionState.conf.autoBroadcastJoinThreshold
     val probed = positions(batch, Seq("doc_id", "tok"))
-      .join(setBits.withColumn("hit", lit(1)), Seq("pos"), "left")
+      .join(if (fits) broadcast(setBits) else setBits, Seq("pos"), "left")
       .groupBy(col("doc_id"), col("tok"))
       .agg((count(col("hit")) === k).cast("long").as("bloom_hit"))
     // exact membership PER SHINGLE (the gate's ground truth — this join is

@@ -100,6 +100,7 @@ object RetrievalOps {
       nQueries: Int = DefaultNQueries, nTerms: Int = DefaultNTerms,
       k: Int = DefaultK): DataFrame =
     bm25Ranked(cachedBm25Scored(spark, dir, nQueries, nTerms), k)
+      .orderBy(col("qid"), col("rk"))
 
   /** The full per-(query, candidate) BM25 score frame, session-cached:
     * `k` only changes the final top-k filter, so q89 (k=5), q226's
@@ -131,8 +132,12 @@ object RetrievalOps {
   private def bm25OnPostings(postings: DataFrame, nQueries: Int,
       nTerms: Int, k: Int): DataFrame =
     bm25Ranked(bm25ScoredOnPostings(postings, nQueries, nTerms), k)
+      .orderBy(col("qid"), col("rk"))
 
-  /** Rank/filter stage over a scored `(qid, hit_id, score)` frame. */
+  /** Rank/filter stage over a scored `(qid, hit_id, score)` frame,
+    * unsorted: it leaves the window hash-partitioned on `qid`, which
+    * [[rrfFusion]] fuses on without another exchange.
+    */
   private def bm25Ranked(scored: DataFrame, k: Int): DataFrame = {
     val wk = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("hit_id"))
@@ -140,7 +145,6 @@ object RetrievalOps {
       .withColumn("rk", row_number().over(wk))
       .filter(col("rk") <= k)
       .select(col("qid"), col("hit_id"), col("score"), col("rk"))
-      .orderBy(col("qid"), col("rk"))
   }
 
   /** Scoring stage: everything up to (but not including) the top-k. */
@@ -208,22 +212,46 @@ object RetrievalOps {
     * Absent-from-list is rank 0 in the output (never a contribution).
     *
     * Scale shape: both input lists end per-query-bounded (≤ kEach rows
-    * per query), so the fusion full-outer join and re-rank run at
-    * query-batch scale — negligible next to the two retrieval passes,
-    * which keep their own documented 100 TB shapes.
+    * per query), so the fusion and re-rank run at query-batch scale —
+    * negligible next to the two retrieval passes, which keep their own
+    * documented 100 TB shapes.
+    *
+    * Fusion is a union of the two lists, each zero-filling the other's
+    * rank column, grouped by (qid, hit_id) with `max`: (qid, hit_id) is
+    * unique within each list, so every group holds one row per list it
+    * appears in, and that equals a full-outer join with absent ranks
+    * coalesced to 0. Both lists leave their top-k windows
+    * hash-partitioned on the query id, and the union keeps that
+    * partitioning (`spark.sql.unionOutputPartitioning`, on by default),
+    * so the aggregate and the fused window run without an exchange. A
+    * sorted input list would break this — a global sort under a union
+    * is not eliminated — hence the unsorted ranked lists; PlanSpec's
+    * q226 pin fails if an exchange or a shuffled join comes back.
     */
   def rrfFusion(spark: SparkSession, dir: String,
       nQueries: Int = DefaultNQueries, kEach: Int = 25,
       k: Int = 10): DataFrame = {
-    val sparse = bm25TopK(spark, dir, nQueries, DefaultNTerms, kEach)
-      .select(col("qid"), col("hit_id"), col("rk").as("rk_sparse"))
-    val dense = SimilarityOps.bruteForceTopK(spark, dir, nQueries, kEach)
+    val sparse = bm25Ranked(
+      cachedBm25Scored(spark, dir, nQueries, DefaultNTerms), kEach)
+    val dense = SimilarityOps.bruteForceRanked(spark, dir, nQueries, kEach)
       .select(col("query_id").as("qid"), col("neighbor_id").as("hit_id"),
-        col("rk").as("rk_dense"))
-    val fused = sparse.join(dense, Seq("qid", "hit_id"), "full_outer")
-      .select(col("qid"), col("hit_id"),
-        coalesce(col("rk_sparse"), lit(0)).cast("int").as("rk_sparse"),
-        coalesce(col("rk_dense"), lit(0)).cast("int").as("rk_dense"))
+        col("rk"))
+    rrfFusionOn(sparse, dense, k)
+  }
+
+  /** [[rrfFusion]] over two explicit `(qid, hit_id, rk)` lists, each
+    * unique on (qid, hit_id).
+    */
+  private[graft] def rrfFusionOn(sparse: DataFrame, dense: DataFrame,
+      k: Int): DataFrame = {
+    val fused = sparse
+      .select(col("qid"), col("hit_id"), col("rk").as("rk_sparse"),
+        lit(0).as("rk_dense"))
+      .union(dense.select(col("qid"), col("hit_id"), lit(0).as("rk_sparse"),
+        col("rk").as("rk_dense")))
+      .groupBy(col("qid"), col("hit_id"))
+      .agg(max(col("rk_sparse")).as("rk_sparse"),
+        max(col("rk_dense")).as("rk_dense"))
       .withColumn("rrf_e6",
         coalesce(expr("1000000 div (60 + nullif(rk_sparse, 0))"), lit(0L)) +
           coalesce(expr("1000000 div (60 + nullif(rk_dense, 0))"), lit(0L)))

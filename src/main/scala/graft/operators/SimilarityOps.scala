@@ -114,15 +114,22 @@ object SimilarityOps {
     * decimals before ranking so ranking is reproducible across engines.
     */
   def bruteForceTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 5): DataFrame = {
-    val scored = cachedBfScored(spark, dir, nQueries)
+      nQueries: Int = 8, k: Int = 5): DataFrame =
+    bruteForceRanked(spark, dir, nQueries, k)
+      .orderBy(col("query_id"), col("rk"))
+
+  /** [[bruteForceTopK]] unsorted: left hash-partitioned on `query_id` by
+    * its top-k window, for consumers that re-partition on the query id
+    * anyway (q226's fusion).
+    */
+  private[graft] def bruteForceRanked(spark: SparkSession, dir: String,
+      nQueries: Int, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
+    cachedBfScored(spark, dir, nQueries).withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"),
         col("rk"))
-      .orderBy(col("query_id"), col("rk"))
   }
 
   /** The exact query×corpus cosine grid `(query_id, vec_id, cos)`,
@@ -511,10 +518,16 @@ object SimilarityOps {
     * k·|corpus| rows (embedding payload included) by vec_id and
     * sorting each group just to keep one row. `min_by` over
     * `struct(-ccos, clabel)` is the same winner — negation is an exact
-    * order-reversing bijection on rounded doubles (Double.compare
-    * treats −0.0 < 0.0 consistently on both sides of the negation),
-    * ties fall to the smaller clabel exactly like the old
-    * `(ccos DESC, clabel ASC)` rank — but it is a DeclarativeAggregate:
+    * order-reversing bijection on rounded non-NaN doubles
+    * (Double.compare treats −0.0 < 0.0 consistently on both sides of
+    * the negation), ties fall to the smaller clabel exactly like the
+    * old `(ccos DESC, clabel ASC)` rank. NaN is the one exception:
+    * negation maps it to itself, and Spark orders NaN above every
+    * number, so a NaN score (only a NaN element yields one — a zero
+    * norm scores 0.0) loses to every real score where the old rank
+    * would have picked it, and an all-NaN vector ties on every
+    * candidate and takes the smallest clabel (EdgeCaseSpec pins both,
+    * for [[centroidAssign]] too). It is a DeclarativeAggregate:
     * map-side partial aggregation collapses each vector's k candidate
     * rows inside the scan partition, so the one shuffle moves |corpus|
     * rows, ÷k bytes, and the per-group sort disappears entirely.

@@ -187,7 +187,7 @@ class PlanLintSpec extends SparkSpecBase {
     // (q64's bucket-cap BNLJ crosses inside lshNearDupCandidates' r17
     // lazy checkpoint — hidden from the pre-execution plan like q332)
     "q52_key_skew", "q57_centroid_assign",
-    "q68_split_leakage", "q70_ivf_topk", "q72_bloom_novelty",
+    "q68_split_leakage", "q70_ivf_topk",
     "q73_lm_perplexity", "q75_semantic_dedup", "q76_kmeans_refine",
     "q79_random_projection", "q80_ivf_sized_topk", "q81_kmeans_sized",
     "q82_sq_topk", "q86_pq_fused", "q88_ivfpq_topk",

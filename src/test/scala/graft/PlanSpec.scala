@@ -67,13 +67,17 @@ class PlanSpec extends SparkSpecBase {
 
   test("q72: bloom set-bit membership joins broadcast; no cartesian") {
     val plan = executed("q72_bloom_novelty")
-    assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
-    // the only nested-loop joins are the 1-row `m` frame crossed in to
-    // supply the modulus — conditionless BNLJ against a single-row
-    // broadcast aggregate, same O(n) shape as the dedup cap frames
-    val bnlj = plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin")).toSeq
-    assert(bnlj.forall(_.contains("Cross")), bnlj.mkString("\n"))
+    // the filter width m is a literal read off the counted history, so
+    // no 1-row aggregate is crossed in to supply the modulus
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    // the set-bit join is broadcast at planning time, so the batch
+    // side's positions (the streamed key) are never shuffled on `pos`;
+    // only the set-bit distinct below the broadcast hashes on its own
+    val setBitJoin = """BroadcastHashJoin \[(pos#\d+L?)\], \[pos#\d+L?\], LeftOuter""".r
+    val batchPos = setBitJoin.findFirstMatchIn(plan).map(_.group(1))
+    assert(batchPos.nonEmpty, plan)
+    assert(!plan.contains(s"hashpartitioning(${batchPos.get}"), plan)
   }
 
   test("q70: IVF probe join broadcasts; codebook cross is BNLJ, never cartesian") {
@@ -175,6 +179,37 @@ class PlanSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin [ivf_list"), plan)
     val bnlj = plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin")).toSeq
     assert(bnlj.nonEmpty && bnlj.forall(_.contains("Cross")), bnlj.mkString("\n"))
+  }
+
+  test("q226: RRF fuses co-partitioned lists — no shuffled join, no exchange from union to window") {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = SparkEntry.queries("q226_rrf_fusion")(spark, sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.toString.contains("SortMergeJoin"), plan.toString)
+    assert(!plan.toString.contains("ShuffledHashJoin"), plan.toString)
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    // every node on a path from a window down to a union
+    def toUnion(p: SparkPlan): Seq[List[SparkPlan]] =
+      if (p.isInstanceOf[UnionExec]) Seq(List(p))
+      else children(p).flatMap(toUnion).map(p :: _)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    val paths = nodes(plan).collect { case w: WindowExec => w }
+      .flatMap(toUnion)
+    assert(paths.nonEmpty, plan.toString)
+    // the union keeps the lists' hash partitioning on qid, so the
+    // (qid, hit_id) aggregate and the fused window need no exchange
+    paths.foreach(path => assert(
+      !path.exists(n => n.isInstanceOf[Exchange] ||
+        n.isInstanceOf[QueryStageExec]),
+      path.map(_.nodeName).mkString(" <- ")))
   }
 
   test("q89: BM25 — query-side joins broadcast, corpus shuffled only for postings") {

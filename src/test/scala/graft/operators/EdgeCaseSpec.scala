@@ -74,4 +74,42 @@ class EdgeCaseSpec extends SparkSpecBase {
     // 3 duplicates 1 (same list by construction) -> dropped; 2 orthogonal
     assert(got === Map(1L -> 1, 2L -> 1, 3L -> 0), got.toString)
   }
+
+  test("argmax assignment: NaN scores never win; all-NaN and zero-norm vectors take the smallest label") {
+    // cosine is 0.0 when either norm is 0, so a NaN score comes only
+    // from a NaN element. Spark orders NaN above every number, so the
+    // negated NaN score is the largest key min_by sees: it loses to any
+    // real score, and a vector whose every score is NaN (or 0.0) ties
+    // on all candidates and falls to the smallest label.
+    val nan = Float.NaN
+    def assign(cv: Seq[(Int, Array[Double])]): Map[Long, Int] = {
+      val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
+          (3L, Array(-1.0f, 0.0f)), (4L, Array(nan, nan)),
+          (5L, Array(0.0f, 0.0f)), (6L, Array(nan, 1.0f)))
+        .toDF("vec_id", "embedding")
+      SimilarityOps.ivfAssign(emb, cv.toDF("clabel", "cv")).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("ivf_list")).toMap
+    }
+    // label 0 is a NaN centroid: it scores NaN against every vector
+    // with a nonzero norm, yet wins only where every score is a tie
+    assert(assign(Seq(0 -> Array(Double.NaN, 1.0), 1 -> Array(1.0, 0.0),
+        2 -> Array(0.0, 1.0))) ===
+      Map(1L -> 1, 2L -> 2, 3L -> 2, 4L -> 0, 5L -> 0, 6L -> 0))
+    assert(assign(Seq(3 -> Array(1.0, 0.0), 5 -> Array(0.0, 1.0))) ===
+      Map(1L -> 3, 2L -> 5, 3L -> 5, 4L -> 3, 5L -> 3, 6L -> 3))
+
+    // centroidAssign: label 0's centroid inherits its member's NaN
+    val dir = java.nio.file.Files.createTempDirectory("graft-argmax-edge").toString
+    Seq((1L, Array(nan, 1.0f), 0), (2L, Array(1.0f, 0.0f), 1),
+        (3L, Array(1.0f, 0.0f), 1), (4L, Array(0.0f, 1.0f), 2),
+        (5L, Array(0.0f, 0.0f), 2))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val got = SimilarityOps.centroidAssign(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
+    // vec 1 (all-NaN scores) and vec 5 (zero norm) -> label 0; the real
+    // vectors reach their own labels past the NaN centroid
+    assert(got === Seq((0, 0, 1L), (1, 1, 2L), (2, 0, 1L), (2, 2, 1L)))
+    DedupOps.clearSessionCaches(spark)
+  }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpecBase {
@@ -231,5 +233,34 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(failedOne.isEmpty && failedFour.isEmpty)
     assert(jobsFour.size === jobsOne.size,
       s"peels=4 started ${jobsFour.size} jobs, peels=1 ${jobsOne.size}")
+  }
+
+  test("kCore: a graph already at its k-core runs no peel") {
+    // K6 at k=3: every degree is 5, so the first degree frame holds no
+    // row below k and is the answer. Any loop that must run a peel to
+    // see that it removes nothing pays at least the fixed one-peel
+    // loop's jobs.
+    val checkpointed = Seq.newBuilder[DataFrame]
+    MidFrames.observer.set(df => checkpointed += df)
+    val (rows, jobs, failed) =
+      try jobsOf("kcore-at-fixpoint") {
+        kCoreRows(GraphOps.kCoreOn(k6Events, k = 3, peels = 4,
+          minSupport = 1))
+      } finally MidFrames.observer.remove()
+    assert(rows === (1 to 6).map(i => (i, 5L)))
+    assert(failed.isEmpty)
+    val (_, fixedJobs, _) = jobsOf("kcore-fixed-one-peel") {
+      fixedPeelKCore(k6Events, k = 3, peels = 1, minSupport = 1)
+    }
+    assert(jobs.size < fixedJobs.size,
+      s"${jobs.size} jobs at the fixpoint, ${fixedJobs.size} for one peel")
+    // the only semi-joins are the peel's, which would be checkpointed
+    val semis = checkpointed.result().filter(_.queryExecution.optimizedPlan
+      .exists {
+        case j: Join => j.joinType == LeftSemi
+        case _ => false
+      })
+    assert(semis.isEmpty, semis.map(_.queryExecution.optimizedPlan)
+      .mkString("\n"))
   }
 }

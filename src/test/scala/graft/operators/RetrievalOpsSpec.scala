@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** BM25 retrieval (q89): ranking structure on a constructed corpus where
@@ -124,4 +126,64 @@ class RetrievalOpsSpec extends SparkSpecBase {
     assert(withEmpty.nonEmpty)
   }
 
+  /** The full-outer-join fusion that [[RetrievalOps.rrfFusionOn]]'s
+    * union form replaces, kept as the reference it must equal.
+    */
+  private def fullOuterRrf(sparse: DataFrame, dense: DataFrame,
+      k: Int): DataFrame = {
+    val fused = sparse.select(col("qid"), col("hit_id"),
+        col("rk").as("rk_sparse"))
+      .join(dense.select(col("qid"), col("hit_id"), col("rk").as("rk_dense")),
+        Seq("qid", "hit_id"), "full_outer")
+      .select(col("qid"), col("hit_id"),
+        coalesce(col("rk_sparse"), lit(0)).cast("int").as("rk_sparse"),
+        coalesce(col("rk_dense"), lit(0)).cast("int").as("rk_dense"))
+      .withColumn("rrf_e6",
+        coalesce(expr("1000000 div (60 + nullif(rk_sparse, 0))"), lit(0L)) +
+          coalesce(expr("1000000 div (60 + nullif(rk_dense, 0))"), lit(0L)))
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("rrf_e6").desc, col("hit_id"))
+    fused.withColumn("rk", row_number().over(w).cast("int"))
+      .filter(col("rk") <= k)
+      .select(col("qid"), col("hit_id"), col("rk_sparse"), col("rk_dense"),
+        col("rrf_e6"), col("rk"))
+      .orderBy(col("qid"), col("rk"))
+  }
+
+  private def rrfRows(df: DataFrame): Seq[(Long, Long, Int, Int, Long, Int)] =
+    df.as[(Long, Long, Int, Int, Long, Int)].collect().toSeq
+
+  test("rrfFusion: the union form equals the full-outer-join form") {
+    val sparse = Seq[(Long, Long, Int)](
+      (1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3), // partial overlap
+      (2L, 20L, 1), (2L, 21L, 2),               // no overlap
+      (3L, 30L, 1), (3L, 31L, 2), (3L, 32L, 3), // full overlap
+      (4L, 40L, 1), (4L, 41L, 2))               // only in sparse
+      .toDF("qid", "hit_id", "rk")
+    val dense = Seq[(Long, Long, Int)](
+      (1L, 12L, 1), (1L, 13L, 2), (1L, 10L, 3),
+      (2L, 22L, 1), (2L, 23L, 2),
+      (3L, 32L, 1), (3L, 31L, 2), (3L, 30L, 3),
+      (5L, 50L, 1))                             // only in dense
+      .toDF("qid", "hit_id", "rk")
+    Seq(1, 2, 10).foreach { k =>
+      val got = rrfRows(RetrievalOps.rrfFusionOn(sparse, dense, k))
+      assert(got === rrfRows(fullOuterRrf(sparse, dense, k)), s"k=$k")
+      assert(got.map(_._1).toSet === Set(1L, 2L, 3L, 4L, 5L), s"k=$k")
+    }
+    // each list's ranks survive fusion: both on qid 3, one side elsewhere
+    val all = rrfRows(RetrievalOps.rrfFusionOn(sparse, dense, 10))
+    assert(all.filter(_._1 == 3L).forall(t => t._3 > 0 && t._4 > 0))
+    assert(all.filter(_._1 == 2L).forall(t => (t._3 == 0) != (t._4 == 0)))
+    assert(all.filter(_._1 == 4L).forall(_._4 == 0))
+    assert(all.filter(_._1 == 5L).forall(_._3 == 0))
+    // and on the testdata's own ranked lists
+    val bm = RetrievalOps.bm25TopK(spark, sf0001, 5, 3, 25)
+      .select(col("qid"), col("hit_id"), col("rk"))
+    val bf = SimilarityOps.bruteForceTopK(spark, sf0001, 5, 25)
+      .select(col("query_id").as("qid"), col("neighbor_id").as("hit_id"),
+        col("rk"))
+    assert(rrfRows(RetrievalOps.rrfFusion(spark, sf0001)) ===
+      rrfRows(fullOuterRrf(bm, bf, 10)))
+  }
 }
