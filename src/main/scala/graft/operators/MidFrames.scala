@@ -37,16 +37,6 @@ object MidFrames {
       df.localCheckpoint(eager)
     }
 
-    /** Lazy `localCheckpoint` whose first consumer is its own row
-      * count: one RDD job fills the blocks and returns how many rows
-      * they hold (an eager checkpoint runs the same job and drops the
-      * count), so every later consumer reads blocks.
-      */
-    def midCpCounted(): (DataFrame, Long) = {
-      val cp = midCp(eager = false)
-      (cp, cp.queryExecution.toRdd.count())
-    }
-
     /** Serialized-storage variant (the r18 block-churn diet): one byte
       * array per block instead of a row object graph.
       */

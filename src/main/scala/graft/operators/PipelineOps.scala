@@ -3,9 +3,13 @@ package graft.operators
 import graft.Tables
 import graft.functions.Text
 import MidFrames._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 
 /** Corpus-assembly operators for the training-data pipeline: deterministic
   * sampling, token-budget shard packing, PII scrubbing. All row-local or
@@ -266,21 +270,65 @@ object PipelineOps {
       .orderBy(col("source"))
   }
 
-  /** Incremental-ingest novelty check via a RELATIONAL Bloom filter: how
-    * much of each new-batch document's shingle set is already in the
-    * historical corpus, answered without ever joining batch shingles
-    * against the (huge) history shingle relation. The filter is built as
-    * DataFrames end-to-end — no driver-side bitset, no UDF:
+  private val bloomHistCache =
+    SessionCaches.newCache[(SparkSession, String, Long)]()
+
+  private val bloomFilterCache =
+    SessionCaches.newCache[(SparkSession, String, Long, Long)]()
+
+  /** The distinct history shingles (docs with `doc_id % batchMod ≠ 0`),
+    * persisted once per session: the filter is built from them, and the
+    * gate's exact-membership join reads them on every call.
+    */
+  private def bloomHistory(spark: SparkSession, dir: String,
+      batchMod: Long): DataFrame =
+    SessionCaches.cached(bloomHistCache, (spark, dir, batchMod))(
+      DedupOps.cachedDistinctShingles(spark, dir)
+        .filter(pmod(col("doc_id"), lit(batchMod)) =!= 0)
+        .select(col("tok")).distinct().persist())
+
+  /** The serialized history filter as a one-row local relation (column
+    * `filter`), built once per cache key by Spark's
+    * `BloomFilterAggregate` over `xxhash64(tok)`. Probes read it through
+    * a scalar subquery, so the bytes never enter a plan string (as a
+    * literal they print as hex in every plan AQE re-posts), and fetching
+    * the row starts no job. An empty history builds no aggregate (Spark
+    * rejects a zero size) and holds a null filter, which probes as null.
+    */
+  private def bloomFilter(spark: SparkSession, dir: String, batchMod: Long,
+      bitsPerItem: Long): DataFrame =
+    SessionCaches.cached(bloomFilterCache, (spark, dir, batchMod, bitsPerItem)) {
+      val hist = bloomHistory(spark, dir, batchMod)
+      val n = hist.count()
+      val bytes =
+        if (n == 0L) null
+        else hist.agg(ColumnBridge.column(new BloomFilterAggregate(
+            ColumnBridge.expression(xxhash64(col("tok"))),
+            Literal(n), Literal(bitsPerItem * n)).toAggregateExpression()))
+          .head().getAs[Array[Byte]](0)
+      spark.createDataFrame(java.util.List.of(Row(bytes)),
+        StructType(Seq(StructField("filter", BinaryType))))
+    }
+
+  /** Incremental-ingest novelty check via a Bloom filter over the
+    * historical corpus: how much of each new-batch document's shingle
+    * set is already in history, answered by a row-local probe instead of
+    * joining batch shingles against the (huge) history shingle relation.
     *
-    *   - m = `bitsPerItem` × |distinct history shingles|, a literal
-    *     read off the counted history checkpoint;
-    *   - each shingle sets `k` positions `pmod(xxhash64(tok, seed), m)`;
-    *     the distinct set-bit positions form a ≤ k·n-row LONG relation —
-    *     the compressed stand-in for history (≈ 3 longs per item vs the
-    *     full string set), broadcast while that bound fits the session's
-    *     broadcast threshold and shuffle-joined on `pos` beyond it (at
-    *     100 TB, or shard the filter by `pmod(pos, shards)`);
-    *   - a batch shingle is a member iff ALL k of its positions are set.
+    *   - the filter is Spark's native `BloomFilterAggregate` over
+    *     `xxhash64(tok)` of the n distinct history shingles, sized at
+    *     `bitsPerItem`·n bits; Spark derives the hash count,
+    *     round(`bitsPerItem`·ln 2) — 11 at 16 bits/item, for a
+    *     per-lookup false-positive rate of about 0.05%;
+    *   - it is built once per (session, dir, batchMod, bitsPerItem) and
+    *     held on the driver in a one-row local relation; each batch
+    *     shingle probes it with `might_contain` inside its scan stage —
+    *     no explode, no shuffle or join on bit positions;
+    *   - Spark caps the filter at
+    *     `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (4 M) and
+    *     `maxNumBits` (8 MiB): above about 4 M distinct history shingles
+    *     it has fewer than `bitsPerItem` bits per item, and `fp_ok`
+    *     reports the excess false positives rather than hiding them.
     *
     * Determinism: a Bloom bitset is the OR of per-item bit patterns, so
     * it depends only on the item SET — never on partitioning or order —
@@ -290,41 +338,20 @@ object PipelineOps {
     * `n_exact_hits` are DuckDB-exact; `no_false_neg` must be 1 (a Bloom
     * filter cannot miss a true member — violation means the plumbing is
     * broken); `fp_ok` bounds the false-positive excess per doc at
-    * max(5, 15% of lookups) — ~30× the expected FP count at
-    * bitsPerItem=16, k=3 (per-lookup fp ≈ (1−e^(−k/bits))^k ≈ 0.5%).
+    * max(5, 15% of lookups) — ~300× the expected FP count at
+    * bitsPerItem = 16.
     */
-  def bloomNovelty(spark: SparkSession, dir: String, k: Int = 3,
+  def bloomNovelty(spark: SparkSession, dir: String,
       bitsPerItem: Long = 16L, batchMod: Long = 5L): DataFrame = {
-    val shingles = DedupOps.cachedDistinctShingles(spark, dir)
-    // hist feeds the set-bit positions and the exact-membership truth
-    // join; counting it fills its lazy checkpoint in the same job that
-    // sizes the filter, so m enters every plan as a literal instead of
-    // a 1-row aggregate crossed into both position frames. n = 0 gives
-    // m = 0, and pmod by zero makes every position null: nothing is set
-    // and nothing probes as a hit.
-    val (hist, n) = shingles.filter(pmod(col("doc_id"), lit(batchMod)) =!= 0)
-      .select(col("tok")).distinct().midCpCounted()
-    val m = bitsPerItem * n
-    val batch = shingles.filter(pmod(col("doc_id"), lit(batchMod)) === 0)
-      .select(col("doc_id"), col("tok"))
-    def positions(df: DataFrame, keep: Seq[String]): DataFrame =
-      df.select(keep.map(col) :+
-        explode(array((0 until k).map(s =>
-          pmod(xxhash64(col("tok"), lit(s)), lit(m))): _*)).as("pos"): _*)
-    // The set bits are at most k·n one-long rows (16 bytes each as
-    // UnsafeRows). While that bound fits the session's broadcast
-    // threshold the join is broadcast at planning time; left to AQE it
-    // became a broadcast only after the batch side's shuffle on `pos`
-    // was already written, and that shuffle was thrown away. Above the
-    // threshold the join is left to Spark, which shuffle-joins on `pos`
-    // instead of OOMing the driver on a forced hint.
-    val setBits = positions(hist, Seq("tok")).select(col("pos")).distinct()
-      .withColumn("hit", lit(1))
-    val fits = k * n * 16L <= spark.sessionState.conf.autoBroadcastJoinThreshold
-    val probed = positions(batch, Seq("doc_id", "tok"))
-      .join(if (fits) broadcast(setBits) else setBits, Seq("pos"), "left")
-      .groupBy(col("doc_id"), col("tok"))
-      .agg((count(col("hit")) === k).cast("long").as("bloom_hit"))
+    val hist = bloomHistory(spark, dir, batchMod)
+    val filter = bloomFilter(spark, dir, batchMod, bitsPerItem)
+    val mightContain = ColumnBridge.column(BloomFilterMightContain(
+      ScalarSubquery(filter.queryExecution.analyzed),
+      ColumnBridge.expression(xxhash64(col("tok")))))
+    val probed = DedupOps.cachedDistinctShingles(spark, dir)
+      .filter(pmod(col("doc_id"), lit(batchMod)) === 0)
+      .select(col("doc_id"), col("tok"),
+        coalesce(mightContain, lit(false)).cast("long").as("bloom_hit"))
     // exact membership PER SHINGLE (the gate's ground truth — this join is
     // exactly what the bloom path spares production callers; the gate pays
     // it once to indict any per-shingle false negative, which a per-doc

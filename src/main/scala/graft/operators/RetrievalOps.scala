@@ -57,12 +57,6 @@ object RetrievalOps {
       .map(i => s"coalesce(max(CASE WHEN t_rank = $i THEN c END), 0.0)")
       .mkString("\n                       + ")
 
-  /** BM25 top-k: the `nQueries` lowest-id docs act as queries, each
-    * represented by its `nTerms` strongest tokens (tf desc, token asc —
-    * deterministic); every corpus doc is scored with Lucene-style BM25
-    * (k1 = 1.2, b = 0.75, idf = ln((N − df + ½)/(df + ½) + 1)) and the
-    * top `k` hits per query are returned.
-    */
   private val postingsCache =
     SessionCaches.newCache[(SparkSession, String)]()
 
@@ -96,6 +90,12 @@ object RetrievalOps {
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
 
+  /** BM25 top-k: the `nQueries` lowest-id docs act as queries, each
+    * represented by its `nTerms` strongest tokens (tf desc, token asc —
+    * deterministic); every corpus doc is scored with Lucene-style BM25
+    * (k1 = 1.2, b = 0.75, idf = ln((N − df + ½)/(df + ½) + 1)) and the
+    * top `k` hits per query are returned.
+    */
   def bm25TopK(spark: SparkSession, dir: String,
       nQueries: Int = DefaultNQueries, nTerms: Int = DefaultNTerms,
       k: Int = DefaultK): DataFrame =

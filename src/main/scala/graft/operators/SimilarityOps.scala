@@ -310,10 +310,6 @@ object SimilarityOps {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** Per-label centroid vectors (label, cv): per-dim mean via posexplode →
-    * groupBy (rounded at 6dp for cross-engine stability) — the coarse
-    * codebook shared by [[centroidAssign]] and the IVF path ([[ivfTopK]]).
-    */
   /** Session-cached [[labelCentroids]] — the coarse codebook is a
     * corpus-scale aggregation with MANY consumers (assignment crossJoin,
     * probe selection, residual join, centroid pseudo-queries …; q88
@@ -329,6 +325,10 @@ object SimilarityOps {
     SessionCaches.cached(labelCentroidsCache, (spark, dir))(
       labelCentroids(Tables.embeddings(spark, dir)).persist())
 
+  /** Per-label centroid vectors (label, cv): per-dim mean via posexplode →
+    * groupBy (rounded at 6dp for cross-engine stability) — the coarse
+    * codebook shared by [[centroidAssign]] and the IVF path ([[ivfTopK]]).
+    */
   private[operators] def labelCentroids(emb: DataFrame): DataFrame = {
     val dims = emb.select(col("label"), col("vec_id"),
       posexplode(col("embedding")).as(Seq("d", "x")))
@@ -486,34 +486,11 @@ object SimilarityOps {
       .orderBy(col("label"), col("assigned_label"))
   }
 
-  /** IVF-style ANN top-k — the OTHER classic scale path next to LSH
-    * ([[lshTopK]]): a coarse quantizer (the label centroids) partitions
-    * the corpus into inverted lists; each query scores only the lists of
-    * its `nProbe` nearest centroids instead of the whole corpus. Shapes:
-    * the codebook is tiny → broadcast twice (corpus assignment + query
-    * probe selection); the only corpus shuffle is the equi-join on the
-    * assigned centroid id. Expected scan fraction ≈ nProbe/k per query —
-    * at 100 TB, k grows with corpus size ([[kFor]] is that knob as code;
-    * [[ivfTopKSized]] runs it) and the inverted lists become the
-    * partitioning key, so a query touches a bounded slice of the corpus
-    * regardless of n.
-    *
-    * Gate (q70): the ENTIRE pipeline — centroid codebook, argmax
-    * assignment, probe selection, probed top-k — is replicated in DuckDB
-    * SQL and compared cell-exact. A recall-vs-exact gate (the q33
-    * contract) is deliberately NOT used here: the synthetic embeddings
-    * carry no label-cosine structure (measured within-label avg cos
-    * 0.002 vs cross-label 0.0006), so centroid probing on THIS corpus is
-    * an honest uniform sample (recall ≈ nProbe/k — measured 15/40 at
-    * nProbe=2 of 10). On real clustered embeddings the same mechanism
-    * concentrates recall; claiming that here would gate a property the
-    * data cannot exhibit.
-    */
   /** Corpus → inverted lists: argmax-cosine centroid assignment over the
     * broadcast codebook, one row per vector — shared by [[ivfTopK]] and
     * the SemDeDup-style [[semanticDedup]].
-    */
-  /** r18 (guide §2.3 "aggregate before you shuffle"): the argmax used
+    *
+    * r18 (guide §2.3 "aggregate before you shuffle"): the argmax used
     * to be a rank-1 window over the corpus×k crossJoin — shuffling
     * k·|corpus| rows (embedding payload included) by vec_id and
     * sorting each group just to keep one row. `min_by` over
@@ -559,6 +536,29 @@ object SimilarityOps {
         expr("(max_size * n_lists * 1000) div n_vecs")
           .as("imbalance_x1000"))
 
+  /** IVF-style ANN top-k — the OTHER classic scale path next to LSH
+    * ([[lshTopK]]): a coarse quantizer (the label centroids) partitions
+    * the corpus into inverted lists; each query scores only the lists of
+    * its `nProbe` nearest centroids instead of the whole corpus. Shapes:
+    * the codebook is tiny → broadcast twice (corpus assignment + query
+    * probe selection); the only corpus shuffle is the equi-join on the
+    * assigned centroid id. Expected scan fraction ≈ nProbe/k per query —
+    * at 100 TB, k grows with corpus size ([[kFor]] is that knob as code;
+    * [[ivfTopKSized]] runs it) and the inverted lists become the
+    * partitioning key, so a query touches a bounded slice of the corpus
+    * regardless of n.
+    *
+    * Gate (q70): the ENTIRE pipeline — centroid codebook, argmax
+    * assignment, probe selection, probed top-k — is replicated in DuckDB
+    * SQL and compared cell-exact. A recall-vs-exact gate (the q33
+    * contract) is deliberately NOT used here: the synthetic embeddings
+    * carry no label-cosine structure (measured within-label avg cos
+    * 0.002 vs cross-label 0.0006), so centroid probing on THIS corpus is
+    * an honest uniform sample (recall ≈ nProbe/k — measured 15/40 at
+    * nProbe=2 of 10). On real clustered embeddings the same mechanism
+    * concentrates recall; claiming that here would gate a property the
+    * data cannot exhibit.
+    */
   def ivfTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
       k: Int = 5, nProbe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(spark, dir)

@@ -45,9 +45,10 @@ class EdgeCaseSpec extends SparkSpecBase {
   }
 
   test("bloomNovelty with an EMPTY history: everything novel, no crash") {
-    // every doc_id ≡ 0 mod 5 -> the history side is empty, m = 0, and the
-    // k hash positions go null (pmod by zero); membership must come out
-    // false everywhere rather than crash or fabricate hits
+    // every doc_id ≡ 0 mod 5 -> the history side is empty, so no filter
+    // is built (Spark rejects a zero size) and every probe reads a null
+    // filter; membership must come out false everywhere rather than
+    // crash or fabricate hits
     val dir = java.nio.file.Files.createTempDirectory("graft-bloom-edge").toString
     Seq((0L, "alpha beta gamma delta"), (5L, "epsilon zeta eta theta"),
         (10L, "iota kappa lambda mu"))

@@ -92,15 +92,50 @@ class OperatorsSpec extends SparkSpecBase {
   }
 
   test("bloomNovelty: fp bound is a real tripwire, not a tautology") {
-    // deliberately undersize the filter 8x: false positives must trip
-    // fp_ok=0 on a meaningful fraction of docs (61/100 measured at
-    // sf0.01, deterministic — fixed corpus, fixed seeds) while the
-    // no-false-negative guarantee still holds on every doc
+    // deliberately undersize the filter 8x (2 bits/item, so Spark picks
+    // one hash): false positives must trip fp_ok=0 on a meaningful
+    // fraction of docs (54/100 measured at sf0.01, deterministic — fixed
+    // corpus, fixed hashes) while the no-false-negative guarantee still
+    // holds on every doc
     DedupOps.clearSessionCaches(spark)
     val rows = PipelineOps.bloomNovelty(spark, "/root/testdata/sf0.01",
       bitsPerItem = 2L).collect()
     assert(rows.exists(_.getAs[Int]("fp_ok") === 0), "undersized bloom produced no FP trips")
     assert(rows.forall(_.getAs[Int]("no_false_neg") === 1))
+    DedupOps.clearSessionCaches(spark)
+  }
+
+  test("bloomNovelty: a second call in a session builds its frame without a Spark job, and its action starts fewer jobs than the first call's") {
+    // the history and its filter are built once per session: the first
+    // call's jobs include that build (history count, filter aggregate),
+    // the second call only probes
+    DedupOps.clearSessionCaches(spark)
+    val dir = "/root/testdata/sf0.01"
+    val (first, firstBuild, _) =
+      jobsOf("bloom-first-build")(PipelineOps.bloomNovelty(spark, dir))
+    val (firstRows, firstAction, _) = jobsOf("bloom-first-action")(first.collect())
+    val (second, secondBuild, _) =
+      jobsOf("bloom-second-build")(PipelineOps.bloomNovelty(spark, dir))
+    val (secondRows, secondAction, _) = jobsOf("bloom-second-action")(second.collect())
+    assert(firstBuild.nonEmpty)
+    assert(secondBuild.isEmpty, s"second build ran jobs $secondBuild")
+    assert(secondAction.size < firstBuild.size + firstAction.size,
+      s"second action ${secondAction.size} jobs, first call " +
+        s"${firstBuild.size} + ${firstAction.size}")
+    assert(secondRows.toSeq === firstRows.toSeq)
+    DedupOps.clearSessionCaches(spark)
+  }
+
+  test("bloomNovelty: one session at bitsPerItem 16 then 2 (no cache clear) still trips fp_ok") {
+    // the filter's cache key carries bitsPerItem: a key without it would
+    // hand the 2-bit call the 16-bit filter and trip nothing
+    DedupOps.clearSessionCaches(spark)
+    val dir = "/root/testdata/sf0.01"
+    val wide = PipelineOps.bloomNovelty(spark, dir).collect()
+    assert(wide.forall(_.getAs[Int]("fp_ok") === 1))
+    val narrow = PipelineOps.bloomNovelty(spark, dir, bitsPerItem = 2L).collect()
+    assert(narrow.exists(_.getAs[Int]("fp_ok") === 0), "2-bit filter produced no FP trips")
+    assert(narrow.forall(_.getAs[Int]("no_false_neg") === 1))
     DedupOps.clearSessionCaches(spark)
   }
 
