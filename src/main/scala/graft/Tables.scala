@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided testdata star schema (TESTDATA.md).
   *
   * Mirrors the reference's source layer (SURVEY.md §2.1): the reference reads
   * raw sas7bdat/CSV into DataFrames (`/root/reference/Capstone/scripts/etl.py:739-807`);
   * offline we ingest parquet with the same "schema known at read time" stance.
-  * Every loader is a plain `spark.read.parquet` so Catalyst gets full
-  * pushdown/pruning on the scan.
+  * Every loader is a plain parquet scan so Catalyst gets full
+  * pushdown/pruning on it.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -36,14 +37,53 @@ object Tables {
     * (the testdata tables are immutable by contract). Entries of
     * stopped sessions are purged on access so a session-cycling JVM
     * cannot pin dead sessions.
+    *
+    * The schema comes from the footer, read on the driver and converted
+    * the way Spark's inference converts it, and is passed to the reader:
+    * left to itself, the first read of each table in a session starts a
+    * one-task Spark job just to open that footer.
     */
   private val frameMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     frameMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    frameMemo.computeIfAbsent((spark, dir, name),
-      k => normalizeNtz(k._1.read.parquet(s"${k._2}/${k._3}.parquet")))
+    frameMemo.computeIfAbsent((spark, dir, name), { k =>
+      val path = s"${k._2}/${k._3}.parquet"
+      normalizeNtz(k._1.read.schema(footerSparkSchema(k._1, path)).parquet(path))
+    })
+  }
+
+  /** `path`'s schema as `spark.read.parquet(path)` infers it under the
+    * session's conf (NTZ inference, nanosAsLong, binaryAsString).
+    */
+  private def footerSparkSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    withFooter(spark, path)((file, meta) => ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, meta), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
+  /** Opens the footer of `path` (a directory: its first part file by
+    * name) on the driver and hands it to `f`.
+    */
+  private def withFooter[T](spark: SparkSession, path: String)(
+      f: (org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.ParquetMetadata) => T): T = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).map(_.getPath)
+          .filter(f => f.getName.endsWith(".parquet"))
+          .sortBy(_.getName).headOption.getOrElse(p)
+      else p
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try f(file, reader.getFooter) finally reader.close()
   }
 
   /** The testdata parquet marks timestamps `isAdjustedToUTC=false`; our
@@ -68,12 +108,6 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** True when `path`'s parquet footer declares column `colName` as
-    * TIMESTAMP(NANOS). Reads the footer directly (one metadata read of
-    * one file — a directory probes its first part file) instead of
-    * pattern-matching Spark's version-dependent error text, so the
-    * dispatch survives error-message changes and exception wrapping.
-    */
   /** Memoized per (path, col) — the footer probe opens the file
     * directly and [[events]] runs on every query construction (r18:
     * thousands of redundant footer opens per bench run). The footer of
@@ -82,6 +116,12 @@ object Tables {
   private val nanosMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Boolean]
 
+  /** True when `path`'s parquet footer declares column `colName` as
+    * TIMESTAMP(NANOS). Reads the footer directly (one metadata read of
+    * one file — a directory probes its first part file) instead of
+    * pattern-matching Spark's version-dependent error text, so the
+    * dispatch survives error-message changes and exception wrapping.
+    */
   private[graft] def footerSaysNanos(spark: SparkSession, path: String,
       colName: String): Boolean =
     nanosMemo.computeIfAbsent((path, colName),
@@ -89,22 +129,9 @@ object Tables {
 
   private def footerSaysNanosUncached(spark: SparkSession, path: String,
       colName: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .filter(f => f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).headOption.getOrElse(p)
-      else p
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
+    withFooter(spark, path) { (_, meta) =>
+      val schema = meta.getFileMetaData.getSchema
       schema.containsField(colName) && {
         val t = schema.getType(Seq(colName): _*)
         t.isPrimitive && (t.asPrimitiveType().getLogicalTypeAnnotation match {
@@ -113,7 +140,7 @@ object Tables {
           case _ => false
         })
       }
-    } finally reader.close()
+    }
   }
 
   /** events.ts has shipped in two physical layouts across testdata

@@ -17,10 +17,23 @@ import org.apache.spark.sql.expressions.Window
   */
 object I94Analytics {
 
+  /** Finishes a question whose answer is bounded by a dimension (months,
+    * dates, visa categories, gender × age band, country × mode, states)
+    * in one task. A global `orderBy` over a parallel answer plans a
+    * range-partition exchange, which under AQE costs three jobs to order
+    * a few hundred rows: a sampling job and a shuffle-map job that each
+    * compute the final aggregate, then the result job. `SinglePartition`
+    * satisfies both the sort and a per-group window, so neither needs an
+    * exchange. Apply it right after the last fact-sized aggregate: the
+    * scans, dimension joins and partial aggregates stay parallel, and the
+    * one task reads only (map tasks × groups) partial rows.
+    */
+  private def inOneTask(answer: DataFrame): DataFrame = answer.coalesce(1)
+
   /** Q1 — monthly arrival trend: trips per (year, month). */
   def monthlyTrend(trips: DataFrame): DataFrame =
-    trips.groupBy(col("i94_year"), col("i94_month"))
-      .agg(count(lit(1)).as("n_trips"))
+    inOneTask(trips.groupBy(col("i94_year"), col("i94_month"))
+      .agg(count(lit(1)).as("n_trips")))
       .orderBy(col("i94_year"), col("i94_month"))
 
   /** Q1b — daily arrival counts inside a date window. Built to consume
@@ -32,9 +45,9 @@ object I94Analytics {
     * over a full-table filtered read (ZoneMapReaderSpec pins both).
     */
   def dailyArrivals(trips: DataFrame): DataFrame =
-    trips.filter(col("arrival_date").isNotNull)
+    inOneTask(trips.filter(col("arrival_date").isNotNull)
       .groupBy(col("arrival_date"))
-      .agg(count(lit(1)).as("n_arrivals"))
+      .agg(count(lit(1)).as("n_arrivals")))
       .orderBy(col("arrival_date"))
 
   /** Q2 — countries sending the most visitors: trips ⋈ countries. */
@@ -64,14 +77,14 @@ object I94Analytics {
     */
   def favouriteModePerCountry(trips: DataFrame, immigrations: DataFrame,
       modes: DataFrame, countries: DataFrame): DataFrame = {
-    val counts = trips
+    val counts = inOneTask(trips
       .join(immigrations.select(col("custom_client_id"), col("mode_of_entry")),
         Seq("custom_client_id"))
       .join(broadcast(modes),
         col("mode_of_entry").cast("string") === modes("mode_id"))
       .join(broadcast(countries), trips("resident_country_id") === countries("country_id"))
       .groupBy(col("country"), col("mode"))
-      .agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n")))
     val w = Window.partitionBy(col("country")).orderBy(col("n").desc, col("mode"))
     counts.withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
@@ -81,20 +94,24 @@ object I94Analytics {
 
   /** Q5 — preferred months: trips ⋈ dates (or directly off i94_month). */
   def preferredMonths(trips: DataFrame): DataFrame =
-    trips.groupBy(col("i94_month"))
-      .agg(count(lit(1)).as("n_trips"))
+    inOneTask(trips.groupBy(col("i94_month"))
+      .agg(count(lit(1)).as("n_trips")))
       .orderBy(col("n_trips").desc, col("i94_month"))
 
-  /** Q6 — most popular visa category. */
-  def topVisaCategories(trips: DataFrame, visa: DataFrame): DataFrame =
+  /** Trips per (visa_purpose, visa_category): trips ⋈ visa, aggregated. */
+  private def visaCounts(trips: DataFrame, visa: DataFrame): DataFrame =
     trips.join(broadcast(visa), trips("visa_id") === visa("visa_id"))
       .groupBy(col("visa_purpose"), col("visa_category"))
       .agg(count(lit(1)).as("n"))
+
+  /** Q6 — most popular visa category. */
+  def topVisaCategories(trips: DataFrame, visa: DataFrame): DataFrame =
+    inOneTask(visaCounts(trips, visa))
       .orderBy(col("n").desc, col("visa_purpose"), col("visa_category"))
 
   /** Q7 — age / gender demographics of travellers (visitors dim). */
   def travellerDemographics(visitors: DataFrame): DataFrame =
-    visitors
+    inOneTask(visitors
       .withColumn("age_band",
         when(col("birth_year").isNull, lit("unknown"))
           .when(col("i94_year") - col("birth_year") < 18, lit("0-17"))
@@ -102,12 +119,15 @@ object I94Analytics {
           .when(col("i94_year") - col("birth_year") < 55, lit("35-54"))
           .otherwise(lit("55+")))
       .groupBy(col("gender"), col("age_band"))
-      .agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n")))
       .orderBy(col("gender").asc_nulls_first, col("age_band"))
 
-  /** Q8 — purpose of visit = visa purpose distribution (dictionary dim). */
+  /** Q8 — purpose of visit = visa purpose distribution (dictionary dim).
+    * The per-category counts are the last fact-sized aggregate; rolling
+    * them up to purposes happens in the same one task.
+    */
   def visitPurpose(trips: DataFrame, visa: DataFrame): DataFrame =
-    topVisaCategories(trips, visa)
+    inOneTask(visaCounts(trips, visa))
       .groupBy(col("visa_purpose"))
       .agg(sum(col("n")).as("n"))
       .orderBy(col("n").desc, col("visa_purpose"))
@@ -133,13 +153,13 @@ object I94Analytics {
       states: DataFrame): DataFrame = {
     val ps = portState.select(col("i94_port"),
       trim(col("state")).as("port_state_code"))
-    immigrations
+    inOneTask(immigrations
       .join(broadcast(ps), Seq("i94_port"))
       .join(broadcast(states),
         col("port_state_code") === states("state_code"), "left")
       .groupBy(col("port_state_code"), states("state"))
       .agg(count(lit(1)).as("n_arrivals"),
-        first(col("median_age")).as("median_age"))
+        first(col("median_age")).as("median_age")))
       .orderBy(col("n_arrivals").desc, col("port_state_code"))
   }
 }
