@@ -1,7 +1,6 @@
 package graft.dq
 
 import graft.Tables
-import graft.operators.MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -187,7 +186,7 @@ object DqSuite {
       .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("total_chars"),
         expr("bit_xor(doc_id)").as("id_xor"))
       .orderBy(col("bucket"))
-      .midCp()
+      .localCheckpoint()
     res
     }
   }
@@ -197,7 +196,7 @@ object DqSuite {
     require(checks.nonEmpty, "quarantineWrite needs at least one check")
     val viol = coalesce(
       checks.map { case (n, c) => when(c, lit(n)) }: _*)
-    val marked = df.withColumn("__failed_chk", viol).midCp()
+    val marked = df.withColumn("__failed_chk", viol).localCheckpoint()
     val clean = marked.filter(col("__failed_chk").isNull)
       .drop("__failed_chk")
     val bad = marked.filter(col("__failed_chk").isNotNull)

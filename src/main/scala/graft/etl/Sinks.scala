@@ -1,6 +1,5 @@
 package graft.etl
 
-import graft.operators.MidFrames._
 import org.apache.spark.sql.{DataFrame, Observation}
 
 /** Write-side registry (SURVEY.md §2.2 K1-K4): each output table routed to
@@ -252,7 +251,7 @@ object Sinks {
       .join(tKeys, keys, "left_anti")
     val matchedDU = changes.filter(col(opCol) =!= "I")
       .join(tKeys, keys, "left_semi")
-    val eff = inserts.unionByName(matchedDU).midCp()
+    val eff = inserts.unionByName(matchedDU).localCheckpoint()
     // affected partitions: where matched D/U rows LIVE in the target,
     // plus where inserts and matched updates WRITE (a matched U whose
     // partition value differs is a MOVE — old and new both rewrite)
@@ -262,7 +261,7 @@ object Sinks {
     val writeParts = inserts.select(pCols.map(col): _*)
       .union(matchedDU.filter(col(opCol) === "U").select(pCols.map(col): _*))
       .distinct()
-    val parts = matchedParts.union(writeParts).distinct().midCp()
+    val parts = matchedParts.union(writeParts).distinct().localCheckpoint()
     val nParts = parts.count()
     // the scoped read prunes to affected partitions; the merge output
     // is localCheckpointed so the overwrite never reads the files it
@@ -282,7 +281,7 @@ object Sinks {
     val scoped = newCols.foldLeft(scoped0)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     val merged = graft.operators.IncrementalOps
-      .mergeChangeset(scoped, eff, keys, opCol).midCp()
+      .mergeChangeset(scoped, eff, keys, opCol).localCheckpoint()
     overwritePartitions(merged, spec, outputDir)
     // affected partitions the merge wrote NOTHING for (all rows deleted,
     // or a move took the last row away): dynamic overwrite never touched

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -2079,7 +2078,7 @@ object CoreQueries {
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
         .as("spend_c"))
-      .midCp()
+      .localCheckpoint()
     val n = cs.agg(count(lit(1)).as("n"),
       sum(col("spend_c").cast("decimal(38,0)")).as("tot"))
     TwoPhaseRank.rankBy(cs, "spend_c", "o_custkey")
@@ -2109,7 +2108,7 @@ object CoreQueries {
     // one checkpoint serves the count aggregate AND rankBy (r14 diet)
     val cs = orders.groupBy(col("o_custkey"))
       .agg(sum(cents).as("spend_c"))
-      .midCp()
+      .localCheckpoint()
     val whales = TwoPhaseRank.rankBy(cs, "spend_c", "o_custkey",
         descending = true)
       .crossJoin(broadcast(cs.agg(count(lit(1)).as("n"))))
@@ -2256,7 +2255,7 @@ object CoreQueries {
       .groupBy(col("l_suppkey").as("suppkey"))
       .agg(count(lit(1)).as("n_late"))
       // one checkpoint serves the totals aggregate AND rankBy (r14 diet)
-      .midCp()
+      .localCheckpoint()
     val tot = late.agg(sum(col("n_late").cast("decimal(38,0)"))
       .as("tot"), count(lit(1)).as("n_sup"))
     TwoPhaseRank.rankBy(late, "n_late", "suppkey",
@@ -2326,7 +2325,7 @@ object CoreQueries {
     val rev = li.groupBy(col("l_partkey").as("pk"))
       .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long"))
         .as("rev_c"))
-      .midCp()
+      .localCheckpoint()
     val tot = rev.agg(sum(col("rev_c").cast("decimal(38,0)")).as("tot_c"))
     val abc = TwoPhaseRank
       .rankBy(rev, "rev_c", "pk", descending = true, cumCol = Some("rev_c"))
@@ -2508,7 +2507,7 @@ object CoreQueries {
         Seq("l_partkey"))
       .groupBy(col("p_brand").as("brand"), col("day"))
       .agg(expr("sum(cents) div count(1)").as("price_c"))
-      .midCp()
+      .localCheckpoint()
     gapFillOn(daily, topBrands)
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +42,7 @@ object CrawlOps {
     val docs = Tables.documents(spark, dir)
       .select(concat(lit("com.example."), col("source")).as("rhost"),
         col("doc_id").as("tie"), col("n_chars"))
-      .midCp()
+      .localCheckpoint()
     val assigned = TwoPhaseRank.rankBy(docs, "rhost", "tie")
       .withColumn("file_id", expr(s"(r - 1) div ${rowsPerFile}L"))
       .select(col("file_id"), col("rhost"), col("n_chars"))
@@ -69,7 +68,7 @@ object CrawlOps {
           min(when(col("exact"), col("min_b").cast("string"))).as("mn"),
           max(when(col("exact"), col("max_b").cast("string"))).as("mx"),
           max(when(col("exact"), lit(0)).otherwise(lit(1))).as("unknown"))
-        .midCp()
+        .localCheckpoint()
       val wls = Seq(
         ("host_point", "com.example.src3", "com.example.src3"),
         ("host_prefix", "com.example.src1", "com.example.src1zzz"),
@@ -98,7 +97,7 @@ object CrawlOps {
           col("rows_scanned"), col("rows_matching"), col("sum_chars"),
           expr("parts_scanned * 1000000 div n_parts").as("scan_ppm"))
         .orderBy(col("workload"))
-        .midCp()
+        .localCheckpoint()
       res
     }
   }

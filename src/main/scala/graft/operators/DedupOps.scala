@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -405,7 +404,7 @@ object DedupOps {
       .withColumn("pop", count(lit(1)).over(Window.partitionBy(col("chunk_no"), col("chunk"))))
       .join(broadcast(capFrame(docs, bucketCap)), col("pop") <= col("cap"))
       .drop("pop", "cap")
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val l = bounded.alias("l")
     val r = bounded.alias("r")
     l.join(r, col("l.chunk_no") === col("r.chunk_no") &&
@@ -431,8 +430,8 @@ object DedupOps {
     // both pair relations feed TWO consumers (their count + the subset
     // anti-join); materialized so each near-dup pipeline runs once per
     // action, not twice — pair lists are metadata-scale
-    val exact = ngramJaccardPairs(spark, dir).midCp(eager = false)
-    val found = simhashNearDup(spark, dir).midCp(eager = false)
+    val exact = ngramJaccardPairs(spark, dir).localCheckpoint(eager = false)
+    val found = simhashNearDup(spark, dir).localCheckpoint(eager = false)
     val nExact = exact.agg(count(lit(1)).as("n_exact_pairs"))
     val nFound = found.agg(count(lit(1)).as("n_found"))
     val nExtra = found.join(exact, Seq("id_a", "id_b", "jaccard"), "left_anti")
@@ -477,12 +476,12 @@ object DedupOps {
     // expensive (shingle join) — materialize once via localCheckpoint,
     // or every round's jobs recompute the whole upstream
     val base = edges.select(col("id_a").as("a"), col("id_b").as("b"))
-      .midCp()
+      .localCheckpoint()
     // nodes BEFORE dropping self-pairs: a self-loop-only node is still
     // a (singleton) component and must keep its own label
     val nodes = base.select(col("a").as("id"))
       .union(base.select(col("b").as("id"))).distinct()
-      .midCp()
+      .localCheckpoint()
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("b").as("a"), col("a").as("b")))
     // large-star: m(u) = min(Γ(u) ∪ {u}); hang every neighbor v > u
@@ -511,7 +510,7 @@ object DedupOps {
     var e = base.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
-      .distinct().midCp()
+      .distinct().localCheckpoint()
     var cur = checksum(e)
     var prev: (Long, Long) = null
     var i = 0
@@ -520,7 +519,7 @@ object DedupOps {
       // consumer and materializes it — one job per round instead of
       // the eager checkpoint's two (r17; CC cost at pair-list scale is
       // round/job count, not bytes — guide §1.2 "fewer passes")
-      val next = smallStar(largeStar(e)).midCp(eager = false)
+      val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
       prev = cur
       cur = checksum(next)
       e = next
@@ -535,7 +534,7 @@ object DedupOps {
       .join(e.select(col("a").as("id"), col("b").as("label")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-      .midCp()
+      .localCheckpoint()
   }
 
   /** Span-level duplication stats (the substring-dedup signal of
@@ -890,12 +889,12 @@ object DedupOps {
     val pref = ranked
       .filter(col("rk") <= col("n") - expr(s"($p * n + ${q - 1}) div $q") + 1)
       .select(col("doc_id"), col("h"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val cand = pref.as("a").join(pref.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     // verification arrays only exist for docs that appear in a
     // candidate pair: semi-join first (a superset of each side's need —
     // join results unchanged), then materialize ONE candidate-bounded
@@ -906,7 +905,7 @@ object DedupOps {
     val sets = sh.join(candIds, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("h"))).as("s"), count(lit(1)).as("n"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val sa = sets.select(col("doc_id").as("id_a"), col("s").as("sa"),
       col("n").as("na"))
     val sb = sets.select(col("doc_id").as("id_b"), col("s").as("sb"),
@@ -1020,7 +1019,7 @@ object DedupOps {
     // the candidate pair list feeds both rescoring sides — materialize
     // it so the whole q121 prefix-join pipeline runs once per action
     val pairs = prefixJaccardJoin(spark, dir).select(col("id_a"), col("id_b"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     // token counts were evaluated once PER SIDE (two full tokenize +
     // aggregate corpus passes) with the candidate restriction applied
     // only by the later join; restrict to candidate doc ids first
@@ -1034,7 +1033,7 @@ object DedupOps {
       .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val ca = counts.select(col("doc_id").as("id_a"), col("tok"),
       col("c").as("ca"))
     val cb = counts.select(col("doc_id").as("id_b"), col("tok"),
@@ -1575,7 +1574,7 @@ object DedupOps {
       .join(TextAnalysisOps.qualityScore(spark, dir)
         .select(col("doc_id"), col("quality")), Seq("doc_id"))
       .withColumn("rk", row_number().over(w))
-      .midCp() // read by both the keeper and the drop side
+      .localCheckpoint() // read by both the keeper and the drop side
     val keep = ranked.filter(col("rk") === 1)
       .select(col("cluster_id"), col("source").as("keep_source"))
     val drop = ranked.filter(col("rk") > 1)
@@ -1659,7 +1658,7 @@ object DedupOps {
         .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
         .orderBy(col("gain").desc, col("doc_id")).limit(1)
         .select(lit(r).as("round"), col("doc_id"), col("gain"))
-        .midCp()
+        .localCheckpoint()
       picks += pick
       val newCovered = residual
         .join(pick.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -1668,7 +1667,7 @@ object DedupOps {
         .join(broadcast(pick.select(col("doc_id"))), Seq("doc_id"),
           "left_anti")
         .join(broadcast(newCovered), Seq("tok"), "left_anti")
-        .midCp()
+        .localCheckpoint()
     }
     // cumulative coverage over the ≤k-row trace (bounded by
     // construction — the constant-grid window class)
@@ -1738,11 +1737,11 @@ object DedupOps {
     chapmanFrom(cachedSourceToks(spark, dir))
 
   private[graft] def chapmanOn(st0: DataFrame): DataFrame =
-    chapmanFrom(st0.distinct().midCp())
+    chapmanFrom(st0.distinct().localCheckpoint())
 
   private def chapmanFrom(st: DataFrame): DataFrame = {
     val per = st.groupBy(col("source")).agg(count(lit(1)).as("nd"))
-      .midCp()
+      .localCheckpoint()
     val ov = st.select(col("source").as("src_a"), col("tok"))
       .join(st.select(col("source").as("src_b"), col("tok")), Seq("tok"))
       .filter(col("src_a") < col("src_b"))
@@ -1768,12 +1767,12 @@ object DedupOps {
 
   /** Core over any `(source, tok)` relation (spec entry point). */
   private[graft] def sketchOverlapOn(st0: DataFrame): DataFrame =
-    sketchOverlapFrom(st0.distinct().midCp())
+    sketchOverlapFrom(st0.distinct().localCheckpoint())
 
   private def sketchOverlapFrom(st: DataFrame): DataFrame = {
     val per = st.groupBy(col("source"))
       .agg(count(lit(1)).as("nd"), hll_sketch_agg(col("tok")).as("sk"))
-      .midCp()
+      .localCheckpoint()
     val ov = st.select(col("source").as("src_a"), col("tok"))
       .join(st.select(col("source").as("src_b"), col("tok")), Seq("tok"))
       .filter(col("src_a") < col("src_b"))

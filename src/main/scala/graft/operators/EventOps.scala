@@ -1,6 +1,5 @@
 package graft.operators
 
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -246,7 +245,7 @@ object EventOps {
     // cap window — 4 corpus passes for one query. Materialize the grid
     // once (lazy checkpoint): it is the small decision relation, never
     // the event payload.
-    val ui = cappedUserItems(ev, userItemCap).midCp(eager = false)
+    val ui = cappedUserItems(ev, userItemCap).localCheckpoint(eager = false)
     val pairs = ui.as("a")
       .join(ui.as("b"), col("a.user_id") === col("b.user_id") &&
         col("a.item") < col("b.item"))
@@ -460,7 +459,7 @@ object EventOps {
           .as("week"))
       .groupBy(col("item"), col("week"))
       .agg(count(lit(1)).as("c"))
-      .midCp()
+      .localCheckpoint()
     val first = counts.groupBy(col("item"))
       .agg(min(col("week")).as("first_week"))
     counts.join(first, "item")
@@ -1720,7 +1719,7 @@ object EventOps {
     // round.
     var v = ev.select(col("event_type").as("t")).distinct()
       .withColumn("m", lit(200000L))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     (1 to iters).foreach { i =>
       val cp = v.join(trd, col("t") === col("i"))
         .groupBy(col("j"))
@@ -1729,7 +1728,7 @@ object EventOps {
       // the LAST round materializes eagerly — trd must stay persisted
       // until the whole chain has evaluated, or the unpersist below
       // would force 8 recomputes of the corpus transition window
-      v = cp.midCp(eager = i == iters)
+      v = cp.localCheckpoint(eager = i == iters)
     }
     trd.unpersist()
     v.select(col("t").as("event_type"), col("m").as("stationary_ppm"))
@@ -2038,7 +2037,7 @@ object EventOps {
       .agg(sum(col("t")).as("err_bound"))
     val tgt = tot.select(expr("stack(3, 50, 90, 99) AS p"), col("n"))
       .withColumn("target_rank", expr("(p * n + 99) div 100"))
-      .select(col("p"), col("target_rank")).midCp()
+      .select(col("p"), col("target_rank")).localCheckpoint()
     val exact = broadcast(tgt).join(ecdf, col("cum") >= col("target_rank"))
       .groupBy(col("p"), col("target_rank"))
       .agg(min(col("v_c")).as("exact_v_c"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import MidFrames._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -145,7 +144,7 @@ object GraphOps {
       // evaluation and cuts the per-round lineage (the q331/q336
       // iteration shape — without it the 3-round plan nests 2^iters
       // copies of the init subtree)
-      val r = r0.midCp(eager = false)
+      val r = r0.localCheckpoint(eager = false)
       val contrib = edgesD
         .join(r.select(col("item").as("src"), col("r")), Seq("src"))
         .groupBy(col("dst"))
@@ -160,7 +159,7 @@ object GraphOps {
       .select(col("item"), col("r").as("rank_q"),
         round(col("r").cast("double") / lit(Unit9.toDouble), 6).as("rank"))
       .orderBy(col("rank_q").desc, col("item"))
-      .midCp()
+      .localCheckpoint()
     out
   }
 
@@ -209,7 +208,7 @@ object GraphOps {
     val deg = pairs.select(col("i").as("item"))
       .union(pairs.select(col("j").as("item")))
       .groupBy(col("item")).agg(count(lit(1)).as("degree"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     // orient each edge low-(degree, id) → high-(degree, id)
     val di = deg.select(col("item").as("i"), col("degree").as("dg_i"))
     val dj = deg.select(col("item").as("j"), col("degree").as("dg_j"))
@@ -221,7 +220,7 @@ object GraphOps {
         when(col("dg_i") < col("dg_j") ||
           (col("dg_i") === col("dg_j") && col("i") < col("j")),
           col("j")).otherwise(col("i")).as("dst"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val wedges = ori.as("e1")
       .join(ori.as("e2"), col("e1.src") === col("e2.src") &&
         col("e1.dst") < col("e2.dst"))
@@ -238,7 +237,7 @@ object GraphOps {
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .orderBy(col("n_triangles").desc, col("item"))
       .limit(k)
-      .midCp()
+      .localCheckpoint()
     out
   }
 
@@ -298,7 +297,7 @@ object GraphOps {
     // spec path: the pairs are an unpersisted aggregate that the first
     // degree aggregate and the first peel both read, so checkpoint them
     kCoreOnEdges(coPairsOn(ev, minSupport, userItemCap)
-      .select(col("i"), col("j")).midCp(), k, peels)
+      .select(col("i"), col("j")).localCheckpoint(), k, peels)
 
   /** Peels `edges` until no node has degree < k or `peels` rounds have
     * run, and returns the surviving degrees by item.
@@ -320,7 +319,7 @@ object GraphOps {
       // Left to a multi-consumer job instead, a lazy checkpoint is
       // filled late by concurrent stages that race its block persist and
       // recompute the chain (measured slower in r17).
-      val deg = degrees.midCp(eager = false)
+      val deg = degrees.localCheckpoint(eager = false)
       if (deg.filter(col("core_degree") < k).queryExecution.toRdd.count() == 0)
         deg.orderBy(col("item"))
       else {
@@ -328,7 +327,7 @@ object GraphOps {
         kCoreOnEdges(edges
             .join(keep.select(col("item").as("i")), Seq("i"), "left_semi")
             .join(keep.select(col("item").as("j")), Seq("j"), "left_semi")
-            .midCp(), k, peels - 1)
+            .localCheckpoint(), k, peels - 1)
       }
     }
   }
@@ -390,7 +389,7 @@ object GraphOps {
           round(num.cast("double") /
             (sqrt(vx.cast("double")) * sqrt(vy.cast("double"))), 6))
           .as("assortativity"))
-      .midCp()
+      .localCheckpoint()
     out
   }
 
@@ -523,7 +522,7 @@ object GraphOps {
         col("k").cast("int").as("k"), col("n_ijk"))
       .orderBy(col("n_ijk").desc, col("i"), col("j"), col("k"))
       .limit(k)
-      .midCp()
+      .localCheckpoint()
     ui.unpersist()
     out
   }
@@ -555,7 +554,7 @@ object GraphOps {
       nbrCap: Int): DataFrame = {
     val edges = edgesOfOrders(li).persist()
     val capped = cappedNbrsOf(edges, nbrCap).persist()
-    val out = linkPredTree(edges, capped, k).midCp()
+    val out = linkPredTree(edges, capped, k).localCheckpoint()
     edges.unpersist()
     capped.unpersist()
     out
@@ -642,7 +641,7 @@ object GraphOps {
   private[graft] def lpOn(pairs: DataFrame, rounds: Int): DataFrame = {
     val sym = pairs.select(col("i").as("src"), col("j").as("dst"))
       .unionByName(pairs.select(col("j").as("src"), col("i").as("dst")))
-      .midCp()
+      .localCheckpoint()
     def trace(r: Int, lab: DataFrame): DataFrame =
       lab.groupBy(col("label")).agg(count(lit(1)).as("sz"),
           sum(col("node") * col("label")).as("fp"))
@@ -652,7 +651,7 @@ object GraphOps {
           col("largest_community").cast("long").as("largest_community"),
           col("assign_fp").cast("long").as("assign_fp"))
     var lab = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).midCp()
+      .withColumn("label", col("node")).localCheckpoint()
     var out = trace(0, lab)
     for (r <- 1 to rounds) {
       // mode pick as a struct-min argmax: min((-c, label)) ≡ the old
@@ -666,7 +665,7 @@ object GraphOps {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-        .midCp() // eager: each lab has two consumers (the trace and
+        .localCheckpoint() // eager: each lab has two consumers (the trace and
       // the next round); a lazy checkpoint would leave both to race
       // its block persist inside the final union job
       out = out.unionByName(trace(r, lab))
@@ -737,7 +736,7 @@ object GraphOps {
     // behind it runs twice (round-17 A/B: 12 → 6 edge-join evaluations
     // across the 3 rounds)
     def normed(raw0: DataFrame, key: String, out: String): DataFrame = {
-      val raw = raw0.midCp(eager = false)
+      val raw = raw0.localCheckpoint(eager = false)
       raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
         .select(col(key), expr(s"raw * ${Unit6}L div mx").as(out))
     }
@@ -748,17 +747,17 @@ object GraphOps {
     // turns 7 synchronous per-rep checkpoint jobs into one job
     // cascade; lineage still truncates at every round
     var hub = edges.select(col("cust")).distinct()
-      .withColumn("hub", lit(Unit6)).midCp(eager = false)
+      .withColumn("hub", lit(Unit6)).localCheckpoint(eager = false)
     var auth: DataFrame = null
     for (_ <- 1 to rounds) {
       auth = normed(
         edges.join(hub, Seq("cust"))
           .groupBy(col("part")).agg(sum(col("hub")).as("raw")),
-        "part", "auth").midCp(eager = false)
+        "part", "auth").localCheckpoint(eager = false)
       hub = normed(
         edges.join(auth, Seq("part"))
           .groupBy(col("cust")).agg(sum(col("auth")).as("raw")),
-        "cust", "hub").midCp(eager = false)
+        "cust", "hub").localCheckpoint(eager = false)
     }
     val topAuth = auth
       .select(lit("auth").as("side"), col("part").as("node_id"),
@@ -806,7 +805,7 @@ object GraphOps {
     val seeds = edgesD.select(col("src"), col("d")).distinct()
       .orderBy(col("d").desc, col("src"))
       .limit(nSeeds).select(col("src").as("item"))
-      .midCp()
+      .localCheckpoint()
     // seeded is read by init + every round (iters+1 consumers); un-
     // materialized each read re-runs the node-distinct + seed join.
     // Lazy checkpoint also truncates the per-round plan the way q331's
@@ -817,7 +816,7 @@ object GraphOps {
         Seq("item"), "left")
       .select(col("item"),
         coalesce(col("is_seed"), lit(0)).as("is_seed"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val teleport = expr(
       s"CASE WHEN is_seed = 1 THEN $Unit9 div $nSeeds ELSE 0L END")
     val init = seeded.select(col("item"), col("is_seed"),
@@ -833,7 +832,7 @@ object GraphOps {
           (expr(s"(15 * CASE WHEN is_seed = 1 THEN $Unit9 div $nSeeds" +
             " ELSE 0L END) div 100") +
             expr("(85 * coalesce(c, 0L)) div 100")).as("r"))
-        .midCp(eager = false) // per-round lineage cut (q331 shape)
+        .localCheckpoint(eager = false) // per-round lineage cut (q331 shape)
     }
     ranks
       .select(col("item"), col("is_seed"), col("r").as("ppr_q"),

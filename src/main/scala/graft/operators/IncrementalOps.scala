@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import MidFrames._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Incremental-processing operators: what a 100 TB corpus pipeline runs
   * BETWEEN full builds — daily crawl drops arrive as a new snapshot and
@@ -696,7 +696,7 @@ object IncrementalOps {
         sum(coalesce(col("quality_bp"), lit(0L))).as("sum_quality_bp"),
         sum(length(col("text")).cast("long")).as("total_chars"))
       .orderBy(col("source"))
-      .midCp()
+      .localCheckpoint()
     res
     }
   }
@@ -751,7 +751,7 @@ object IncrementalOps {
           coalesce(col("succ"), col("wrap")).getField("shard").as(out))
     val plan = assign(ring(nBefore), "from_shard")
       .join(assign(ring(nBefore + 1), "to_shard"), Seq("doc_id"))
-      .midCp()
+      .localCheckpoint()
     val moves = plan.filter(col("from_shard") =!= col("to_shard"))
       .groupBy(col("from_shard"), col("to_shard"))
       .agg(count(lit(1)).as("n_docs"))
@@ -794,7 +794,7 @@ object IncrementalOps {
       // serialized: read 9× (3 rankBys × count/sample/shuffle) but held
       // as one byte array per block instead of a row object graph —
       // the r18 block-churn diet (see TwoPhaseRank.bucketize)
-      .midCpSer()
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     def filesFor(key: String) =
       graft.operators.TwoPhaseRank.rankBy(li, key, "tie")
         .withColumn("file_id", expr(s"(r - 1) div ${rowsPerFile}L"))
@@ -872,7 +872,7 @@ object IncrementalOps {
         .select(datediff(col("l_shipdate").cast("date"), epoch)
             .cast("long").as("ship_day"),
           (col("l_orderkey") * 10 + col("l_linenumber")).as("tie"))
-        .midCp()
+        .localCheckpoint()
       TwoPhaseRank.rankBy(li, "ship_day", "tie").persist()
     })
 
@@ -894,7 +894,7 @@ object IncrementalOps {
       spec, out)
     val zone = graft.etl.ParquetZoneMaps
       .partitionStats(spark, s"$out/layout_probe", "ship_day", "file_id")
-      .midCp()
+      .localCheckpoint()
     def d(s: String) = datediff(lit(s).cast("date"), epoch).cast("long")
     val wl = spark.range(1).select(explode(array(
         struct(lit("ship_point").as("workload"),
@@ -922,7 +922,7 @@ object IncrementalOps {
         col("rows_scanned"), col("rows_matching"),
         expr("parts_scanned * 1000000 div n_parts").as("scan_ppm"))
       .orderBy(col("workload"))
-      .midCp()
+      .localCheckpoint()
     res
     }
   }
@@ -989,7 +989,7 @@ object IncrementalOps {
         .agg(sum(col("n_rows")).as("n_rows"),
           min(col("min_a")).as("mna"), max(col("max_a")).as("mxa"),
           min(col("min_b")).as("mnb"), max(col("max_b")).as("mxb"))
-        .midCp()
+        .localCheckpoint()
       val wls = Seq(
         ("box", 100L, 160L, 200L, 260L),
         ("a_slab", 100L, 160L, 0L, 1023L),
@@ -1022,7 +1022,7 @@ object IncrementalOps {
           col("rows_scanned"), col("rows_matching"), col("sum_payload"),
           expr("parts_scanned * 1000000 div n_parts").as("scan_ppm"))
         .orderBy(col("workload"))
-        .midCp()
+        .localCheckpoint()
       res
     }
   }
@@ -1073,7 +1073,7 @@ object IncrementalOps {
       // the standing manifest: file-grain rows from the base build
       val manifest0 = graft.etl.ParquetZoneMaps
         .rowGroupStats(spark, path, "ship_day", requireStats = false)
-        .toDF().midCp()
+        .toDF().localCheckpoint()
       // the append lands; ONLY files absent from the manifest are probed
       graft.etl.Sinks.write(
         assigned.filter(col("file_id") >= baseFiles)
@@ -1094,7 +1094,7 @@ object IncrementalOps {
         .agg(sum(col("n_rows")).as("n_rows"),
           min(col("min_v")).as("min_day"), max(col("max_v")).as("max_day"))
         .orderBy(col("part_id"))
-        .midCp()
+        .localCheckpoint()
       res
     }
   }

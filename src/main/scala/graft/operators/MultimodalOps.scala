@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import MidFrames._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,7 +176,7 @@ object MultimodalOps {
         hex(col("media")).as("h"))
       .filter(col("n") >= 2)
       .select(col("doc_id"), expr(dhashExpr).as("code"))
-      .midCp()
+      .localCheckpoint()
     val bands = coded.select(col("doc_id"), col("code"),
       explode(expr("transform(sequence(0, 3), b -> named_struct(" +
         "'b', b, 'band', shiftright(code, b * 16) & 65535))")).as("s"))

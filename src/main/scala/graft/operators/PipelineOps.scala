@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
-import MidFrames._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -856,10 +855,10 @@ object PipelineOps {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .midCp()
+      .localCheckpoint()
     val tot = d.agg(
       expr(s"CAST((sum(n_tokens) + ${cap - 1}) div $cap AS BIGINT)")
-        .as("lower_bound_bins")).midCp()
+        .as("lower_bound_bins")).localCheckpoint()
     val nf = TwoPhaseRank.rankBy(d, "doc_id", "doc_id",
         cumCol = Some("n_tokens"))
       .select(expr(s"CAST((cum - 1) DIV $cap AS BIGINT)").as("bin"),
@@ -938,7 +937,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_ij"),
         sum(when(col("ca") > col("cb"), lit(1L)).otherwise(lit(0L)))
           .as("w_ij"))
-      .midCp()
+      .localCheckpoint()
     val wins = mat.groupBy(col("si").as("source"))
       .agg(sum(col("w_ij")).as("wins"), sum(col("n_ij")).as("duels"))
     var p = wins.select(col("source"), lit(1000000L).as("p"))
@@ -959,7 +958,7 @@ object PipelineOps {
       p = raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
         .select(col("source"),
           expr("raw * 1000000L div greatest(mx, 1L)").as("p"))
-        .midCp()
+        .localCheckpoint()
     }
     wins.join(p, Seq("source"))
       .select(col("source"), col("duels"), col("wins"),
@@ -1023,7 +1022,7 @@ object PipelineOps {
             "CAST((n_docs * sxx - sx * sx) div (n_docs * (n_docs - 1))" +
               " AS DOUBLE)"))).cast("long"))
           .otherwise(lit(0L)).as("sigma"))
-      .midCp()
+      .localCheckpoint()
     val prop = hamiltonOnWeights(
       m.select(col("source"), col("n_docs").as("w")), slots,
       "prop_alloc")
@@ -1064,7 +1063,7 @@ object PipelineOps {
   private[graft] def randomizationTestOn(docs: DataFrame,
       replicas: Int): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
-      col("n_chars").cast("long").as("x")).midCp()
+      col("n_chars").cast("long").as("x")).localCheckpoint()
     val tot = base.agg(count(lit(1)).as("n_all"), sum(col("x")).as("sx"))
     val obs = base.groupBy(col("source"))
       .agg(count(lit(1)).as("na"), sum(col("x")).as("sa"))
@@ -1074,7 +1073,7 @@ object PipelineOps {
           " sa * 1000 div na - (sx - sa) * 1000 div (n_all - na)" +
           " ELSE 0L END").as("obs_diff_milli"),
         col("na"), col("n_all"))
-      .midCp()
+      .localCheckpoint()
     // ONE coin per (doc, replicate), shared across scenarios: each
     // scenario's test reads only its own threshold of the coin, so
     // cross-scenario correlation cannot touch any single test's
@@ -1087,7 +1086,7 @@ object PipelineOps {
         conv(substring(md5(concat(col("doc_id").cast("string"),
           lit("_rt_"), col("r").cast("string"))), 1, 12), 16, 10)
           .cast("long"), lit(1000000L)))
-      .midCp()
+      .localCheckpoint()
     val rep = coins
       .crossJoin(broadcast(obs.select(col("source").as("scen"),
         col("na"), col("n_all"))))
@@ -1168,7 +1167,7 @@ object PipelineOps {
       .filter(col("sw") > 0)
       .select(col("source"), col("r"),
         expr("swx * 1000 div sw").as("m"))
-      .midCp() // read by both the rank pass and the live count
+      .localCheckpoint() // read by both the rank pass and the live count
     val ranked = rep.withColumn("rk", row_number().over(
       Window.partitionBy(col("source"))
         .orderBy(col("m"), col("r"))))

@@ -36,24 +36,14 @@ private[graft] object SessionCaches {
     * build again). Default: a quarter of the JVM heap — under Spark's
     * default on-heap storage fraction (~30% of heap), so the budget
     * trips BEFORE the MemoryStore starts thrashing block eviction.
-    * `SPARK_GRAFT_CACHE_BUDGET_MB` overrides (tests pin tiny budgets;
-    * a 1000-executor cluster would size it to executor storage).
+    * `SPARK_GRAFT_CACHE_BUDGET_MB` overrides (a 1000-executor cluster
+    * would size it to executor storage; SessionCacheBudgetSpec pins
+    * tiny budgets here).
     */
   @volatile private[graft] var budgetBytes: Long =
     sys.env.get("SPARK_GRAFT_CACHE_BUDGET_MB")
       .map(_.toLong * 1024L * 1024L)
       .getOrElse(Runtime.getRuntime.maxMemory / 4)
-
-  /** Thread-scoped budget override (tests): suites share one JVM and
-    * may run in parallel, so a spec that pins a 1-byte budget must not
-    * leak it into concurrently-running suites' cached() calls.
-    */
-  private[graft] val budgetOverride = new ThreadLocal[java.lang.Long]
-
-  private def effectiveBudget: Long = {
-    val o = budgetOverride.get
-    if (o != null) o.longValue else budgetBytes
-  }
 
   /** LRU order over every live entry (access-ordered LinkedHashMap),
     * keyed by (owning map IDENTITY, key) — two empty cache maps are
@@ -150,7 +140,7 @@ private[graft] object SessionCaches {
     */
   private def evictOverBudget(spark: SparkSession, keep: EntryId): Unit = {
     if (spark.sparkContext.isStopped) return
-    val budget = effectiveBudget
+    val budget = budgetBytes
     // phase 1 (locked, cheap): LRU-ordered snapshot of this session's
     // live entries
     val snapshot: Seq[(EntryId, DataFrame)] = lru.synchronized {
@@ -240,13 +230,6 @@ private[graft] object SessionCaches {
       if (existing != null) (existing, false)
       else {
         val v = build
-        // lint observation (r18, VERDICT r17 item 3): a session-cached
-        // frame appears as an InMemoryTableScan to every consumer, so
-        // the shapes inside its BUILD escaped the registry-wide plan
-        // lint; PlanLintSpec sets this observer to walk build plans at
-        // admission (same device as MidFrames.observer)
-        val obs = MidFrames.observer.get
-        if (obs != null) obs(v)
         admissionCount.incrementAndGet()
         if (evictedKeys.remove(id)) rebuildCount.incrementAndGet()
         val prev = m.putIfAbsent(k, v)

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Vectors
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -698,7 +697,7 @@ object SimilarityOps {
     // pipelines (exact + Hamming) — 3 corpus passes each. nQueries·k
     // rows at most.
     val common = a.join(b, Seq("query_id", "neighbor_id"))
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val p = common.as("x").join(common.as("y"),
         col("x.query_id") === col("y.query_id") &&
           col("x.neighbor_id") < col("y.neighbor_id"))
@@ -1528,7 +1527,7 @@ object SimilarityOps {
     // band relation twice, and each un-materialized read re-hashes the
     // corpus through all nTables hyperplane sets + the population
     // window. Rows are (vec_id, tbl, bucket) — metadata-scale.
-    val bounded = popCapped(banded, capDf).midCp(eager = false)
+    val bounded = popCapped(banded, capDf).localCheckpoint(eager = false)
     bounded.select(col("vec_id").as("id_a"), col("tbl"), col("bucket"))
       .join(bounded.select(col("vec_id").as("id_b"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))
@@ -1622,7 +1621,7 @@ object SimilarityOps {
     // (or reuse the session-cached pair relation when the dir path
     // hands one in; the persisted frame serves all three consumers)
     val pairs = pairs0.getOrElse(
-      lshNearDupDF(emb, threshold, nPlanes, nTables).midCp())
+      lshNearDupDF(emb, threshold, nPlanes, nTables).localCheckpoint())
       .select(col("id_a"), col("id_b"))
     val sym = pairs.select(col("id_a").as("v"), col("id_b").as("n"))
       .unionByName(pairs.select(col("id_b").as("v"), col("id_a").as("n")))
@@ -1630,7 +1629,7 @@ object SimilarityOps {
     // point with deg eps-neighbors is core iff deg + 1 >= minPts —
     // minPts values port unchanged from sklearn/ELKI
     val core = sym.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") + 1 >= minPts).select(col("v")).midCp()
+      .filter(col("deg") + 1 >= minPts).select(col("v")).localCheckpoint()
     val coreEdges = pairs
       .join(core.withColumnRenamed("v", "id_a"), Seq("id_a"), "left_semi")
       .join(core.withColumnRenamed("v", "id_b"), Seq("id_b"), "left_semi")
@@ -1645,7 +1644,7 @@ object SimilarityOps {
       .join(core, Seq("v"), "left_anti")
       .groupBy(col("v")).agg(min(col("cluster_id")).as("cluster_id"))
       .select(col("v"), col("cluster_id"), lit(0L).as("is_core"))
-    val assigned = coreLab.unionByName(borderLab).midCp()
+    val assigned = coreLab.unionByName(borderLab).localCheckpoint()
     val clusters = assigned.groupBy(col("cluster_id"))
       .agg(sum(col("is_core")).as("n_core"),
         (count(lit(1)) - sum(col("is_core"))).as("n_border"),
@@ -1690,7 +1689,7 @@ object SimilarityOps {
     val emb = emb0.select(col("vec_id"), col("embedding"))
     val pairs = pairs0.getOrElse(
       lshNearDupDF(emb, thresholds.min, nPlanes, nTables)
-        .midCp())
+        .localCheckpoint())
     val nAll = emb.agg(count(lit(1)).as("n_all"))
     // ONE CC fixpoint for the whole monotone grid (VERDICT r14 item
     // 5): the grid previously ran one serial large-star/small-star
@@ -1717,7 +1716,7 @@ object SimilarityOps {
       .toDF("k", "t", "t_bp")
     val tagged = pairs.crossJoin(broadcast(tiers))
       .filter(col("cos") >= col("t"))
-      .midCp() // read by the CC seed and the edge census
+      .localCheckpoint() // read by the CC seed and the edge census
     val lab = DedupOps.connectedComponents(tagged
       .select((col("id_a") * nT + col("k")).as("id_a"),
         (col("id_b") * nT + col("k")).as("id_b")))
@@ -1984,19 +1983,19 @@ object SimilarityOps {
       .withColumn("rk", row_number().over(wq))
       .filter(col("rk") <= nCand)
       .select(col("query_id"), col("vec_id"), col("embedding"), col("qm"))
-      .midCp()
+      .localCheckpoint()
     val slim = cand.select(col("query_id"), col("vec_id"), col("embedding"))
     val pair = slim.toDF("query_id", "ca", "va")
       .join(slim.toDF("query_id", "cb", "vb"), Seq("query_id"))
       .filter(col("ca") =!= col("cb"))
       .withColumn("pm", gridM(col("va"), col("vb")))
       .select(col("query_id"), col("ca"), col("cb"), col("pm"))
-      .midCp()
+      .localCheckpoint()
     var selected = cand.withColumn("rn", row_number().over(wq))
       .filter(col("rn") === 1)
       .select(col("query_id"), col("vec_id"), col("qm"),
         lit(0L).as("ms"), lit(1).as("mmr_rank"))
-      .midCp()
+      .localCheckpoint()
     for (r <- 2 to kSel) {
       val ms = pair
         .join(selected.select(col("query_id"), col("vec_id").as("cb")),
@@ -2015,7 +2014,7 @@ object SimilarityOps {
         .filter(col("rn") === 1)
         .select(col("query_id"), col("vec_id"), col("qm"), col("ms"),
           lit(r).as("mmr_rank"))
-      selected = selected.unionByName(pick).midCp()
+      selected = selected.unionByName(pick).localCheckpoint()
     }
     selected.select(col("query_id"), col("vec_id"), col("mmr_rank"),
       col("qm").as("relevance_m"), col("ms").as("penalty_m"),
@@ -2109,7 +2108,7 @@ object SimilarityOps {
         lit(s"_kpp_$seed"))))
       .orderBy(col("h"), col("vec_id")).limit(1)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .midCp()
+      .localCheckpoint()
     for (r <- 1 to rounds) {
       val d2 = e.crossJoin(broadcast(cand))
         .withColumn("dbp", lit(10000L) -
@@ -2127,7 +2126,7 @@ object SimilarityOps {
           lit(2L * k).cast("decimal(38,0)") * col("d2") * lit(1000000L))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       cand = cand.unionByName(sampled).dropDuplicates("cid")
-        .midCp()
+        .localCheckpoint()
     }
     // struct-min argmax, not a rank-1 window (r18 — the ivfAssign
     // rewrite): the nearest-candidate vote per vector collapses
@@ -2173,7 +2172,7 @@ object SimilarityOps {
     val emb = Tables.embeddings(spark, dir)
     val k = kFor(emb.count(), 100L)
     val bf = bruteForceTopK(spark, dir, 8, 5)
-      .select(col("query_id"), col("neighbor_id")).midCp()
+      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
     def profile(name: String, cvec0: => DataFrame): DataFrame = {
       // two consumers (balance assignment, probe chain) — materialize
       // once per session. localCheckpoint, NOT persist: a persisted
@@ -2184,7 +2183,7 @@ object SimilarityOps {
       // executed plan (and the strict plan-lint allowlist) depend on
       // suite ordering. The checkpoint's LogicalRDD matches nothing.
       val cvec = SessionCaches.cached(
-        kppCodebookCache, (spark, dir, k, name))(cvec0.midCp())
+        kppCodebookCache, (spark, dir, k, name))(cvec0.localCheckpoint())
       val bal = ivfAssign(emb, cvec)
         .groupBy(col("ivf_list")).agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("n_lists"), sum(col("sz")).as("n_vecs"),

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1212,7 +1211,7 @@ object TextAnalysisOps {
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(concat(lit(" "), concat_ws("  ", split(col("w"), "")),
         lit(" ")).as("syms"), col("n"))
-      .midCp()
+      .localCheckpoint()
     val rules = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
       val top = words
@@ -1227,13 +1226,13 @@ object TextAnalysisOps {
         .orderBy(col("n_merge").desc, col("s1"), col("s2"))
         .limit(1)
         .select(lit(r).as("merge_rank"), col("s1"), col("s2"), col("n_merge"))
-        .midCp()
+        .localCheckpoint()
       rules += top
       words = words
         .crossJoin(broadcast(top.select(col("s1").as("m1"), col("s2").as("m2"))))
         .select(expr("replace(syms, concat(' ', m1, '  ', m2, ' '), " +
           "concat(' ', m1, m2, ' '))").as("syms"), col("n"))
-        .midCp()
+        .localCheckpoint()
     }
     rules.result().reduce(_.union(_)).orderBy(col("merge_rank"))
   }
@@ -1681,7 +1680,7 @@ object TextAnalysisOps {
     docs.select(explode(Text.tokens(col("text"))).as("w"))
       .filter(length(col("w")).between(1, maxWordLen))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .midCp()
+      .localCheckpoint()
 
   /** Seed candidates with likelihoods: every substring ≤ `maxPieceLen`
     * weighted by word frequency, floored at `minFreq` with single
@@ -1702,7 +1701,7 @@ object TextAnalysisOps {
       .select(col("piece"), col("freq"),
         expr("CAST(CAST(freq AS decimal(38,0)) * 1000000 DIV tot0 AS BIGINT)")
           .as("p0_ppm"))
-      .midCp()
+      .localCheckpoint()
   }
 
   /** The hard-E-step decode: `maxWordLen` fixed MaxMatch rounds over
@@ -1725,7 +1724,7 @@ object TextAnalysisOps {
           col("piece"))).as("best"))
         .select(col("w"), col("n"), col("pos"),
           col("best.piece").as("piece"), col("best.l").as("l"))
-        .midCp()
+        .localCheckpoint()
       picks += picked.select(col("w"), col("n"), col("piece"))
       state = picked.select(col("w"), col("n"),
         (col("pos") + col("l")).as("pos"))
@@ -1847,7 +1846,7 @@ object TextAnalysisOps {
         expr("CAST(CAST(cnt AS decimal(38,0)) * 1000000 DIV tot1 AS BIGINT)"),
         lit(0L)).as("lik"))
       .filter(length(col("piece")) === 1 || col("lik") >= minLikPpm)
-      .midCp()
+      .localCheckpoint()
   }
 
   private def unigramPruneFrom(words: DataFrame, scored: DataFrame,
@@ -2077,14 +2076,14 @@ object TextAnalysisOps {
       // consumers are sequential (acc's broadcast completes before the
       // crossJoin stage), so the final action materializes the chain —
       // 7 synchronous per-rep checkpoint jobs become one cascade
-      .midCp(eager = false)
+      .localCheckpoint(eager = false)
     val trace = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
       def accOf(v: String) = greatest(least(
         expr(s"sum(CASE WHEN $v = 1 THEN post ELSE 1000000 - post END)" +
           " div count(1)"), lit(999999L)), lit(1L))
       val acc = items.agg(accOf("v1").as("a1"), accOf("v2").as("a2"),
-        accOf("v3").as("a3")).midCp(eager = false)
+        accOf("v3").as("a3")).localCheckpoint(eager = false)
       items = items.crossJoin(broadcast(acc))
         .withColumn("n1", expr(
           "(CASE WHEN v1 = 1 THEN a1 ELSE 1000000 - a1 END) * " +
@@ -2097,7 +2096,7 @@ object TextAnalysisOps {
         .select(col("doc_id"), col("v1"), col("v2"), col("v3"),
           expr("CAST(CAST(n1 AS decimal(38,0)) * 1000000" +
             " div (n1 + n0) AS BIGINT)").as("post"))
-        .midCp(eager = false)
+        .localCheckpoint(eager = false)
       val nPos = items.agg(
         sum(when(col("post") >= 500000L, 1L).otherwise(0L)).as("n_pos"))
       trace += acc.crossJoin(broadcast(nPos))

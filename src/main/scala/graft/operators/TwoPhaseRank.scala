@@ -1,9 +1,9 @@
 package graft.operators
 
-import MidFrames._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Scalable global rank / running sum over VALUE-ordered frames — the
   * q130 two-phase bucket-offset pattern generalized from key-ordered
@@ -75,7 +75,7 @@ object TwoPhaseRank {
     * plan (VERDICT r13 item 2, the checkpoint diet).
     */
   private[graft] def isMaterialized(df: DataFrame): Boolean =
-    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+    df.storageLevel != StorageLevel.NONE ||
       df.queryExecution.logical
         .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
@@ -110,11 +110,11 @@ object TwoPhaseRank {
     val ord: Seq[Column] =
       if (descending) Seq(col(valueCol).desc, col(tieCol).asc)
       else Seq(col(valueCol).asc, col(tieCol).asc)
-    val base = if (isMaterialized(df)) df else df.midCp()
+    val base = if (isMaterialized(df)) df else df.localCheckpoint()
     base
       .repartitionByRange(nBuckets, ord: _*)
       .withColumn("_bkt", spark_partition_id())
-      .midCpSer()
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
   }
 
   /** Attach `r` (global 1-based row_number, LONG) and — when `cumCol`
@@ -137,7 +137,7 @@ object TwoPhaseRank {
     // materialize first (or adopt the caller's materialization): the
     // sampling pass, the shuffle, AND the auto-size row count below
     // all read one frozen copy instead of recomputing the upstream
-    val base = if (isMaterialized(df)) df else df.midCp()
+    val base = if (isMaterialized(df)) df else df.localCheckpoint()
     val nb =
       if (nBuckets > 0) nBuckets
       else {

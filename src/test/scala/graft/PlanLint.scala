@@ -3,32 +3,48 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{PlanExpression, PythonUDF, ScalaUDF}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Plan-walk utilities behind PlanLintSpec: extract the scale-killer
   * shapes (partitionless windows, cartesian products, nested-loop
   * joins, UDF nodes) from a query's pre-AQE physical plan, including
-  * subquery plans. Pre-AQE (`sparkPlan`) is deliberate: window
-  * partitioning, cartesian-ness and UDF presence are fixed before
-  * adaptive re-planning, while join-strategy picks (broadcast vs SMJ)
-  * flip with cache state and are NOT pinned here (the q223 lesson).
+  * subquery plans and the build plans of the cached frames it reads.
+  * Pre-AQE (`sparkPlan`, and a cached build's AQE `inputPlan`) is
+  * deliberate: window partitioning, cartesian-ness and UDF presence
+  * are fixed before adaptive re-planning, while join-strategy picks
+  * (broadcast vs SMJ) flip with cache state and are NOT pinned here
+  * (the q223 lesson).
   *
-  * Known blind spot, documented: plans hidden behind `localCheckpoint`
-  * or a cached session frame appear as scans, so windows upstream of a
-  * checkpoint escape this walk — those pipelines carry their own
-  * plan-probe variants (`coOrderLinkPredTree` et al.) and per-query
-  * pins in PlanSpec.
+  * A `localCheckpoint`ed frame appears as a scan; the plan before the
+  * checkpoint is its own `localCheckpoint` execution, which
+  * `SparkSpecBase.plansOf` collects along with every other action a
+  * query runs while it is built.
   */
 object PlanLint {
 
-  /** Every node of the physical plan, descending into subquery plans. */
+  /** Every node of the physical plan, descending into the plans a node
+    * holds outside its children.
+    */
   def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val here = p.collect { case n => n }
-    here ++ here.flatMap(_.expressions.flatMap(_.collect {
-      case pe: PlanExpression[_] => pe.plan
-    }).collect { case sp: SparkPlan => sp }.flatMap(allNodes))
+    here ++ here.flatMap(hidden).flatMap(allNodes)
   }
+
+  /** Subquery plans, the build plan behind an in-memory scan, and an
+    * adaptive plan's pre-AQE `inputPlan`.
+    */
+  private def hidden(n: SparkPlan): Seq[SparkPlan] = n match {
+    case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+    case s: InMemoryTableScanExec => subqueries(s) :+ s.relation.cachedPlan
+    case _ => subqueries(n)
+  }
+
+  private def subqueries(n: SparkPlan): Seq[SparkPlan] =
+    n.expressions.flatMap(_.collect { case pe: PlanExpression[_] => pe.plan })
+      .collect { case sp: SparkPlan => sp }
 
   def physical(df: DataFrame): SparkPlan = df.queryExecution.sparkPlan
 

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+
 /** Registry-WIDE plan lint: walks the pre-AQE physical plan of every
   * `SparkEntry.queries` entry on sf0.001 and bans the scale-killer
   * shapes outside explicit, rationale-carrying allowlists. Round 11
@@ -54,8 +57,6 @@ class PlanLintSpec extends SparkSpecBase {
     "q303_whale_trend"     -> Set("_bkt"),
     "q329_bin_packing"     -> Set("_bkt"), // two rankBy rides
     "q341_sort_pruning"    -> Set("_bkt"), // three rankBy layouts
-    // (q351's rankBy windows and 3-row workload BNLJ all execute
-    // before its localCheckpoint — the returned plan is a bare scan)
     // constant-sized grids: budget/threshold stacks, probe sets,
     // score grids, top-constant vocab cuts
     "q140_budget_select"   -> Set("k"),   // #budgets × stack rows
@@ -73,9 +74,6 @@ class PlanLintSpec extends SparkSpecBase {
     // bounded ANN frames: histogram/codebook/query-set cardinality
     "q80_ivf_sized_topk"   -> Set("h"),
     "q88_ivfpq_topk"       -> Set("qv_id", "clabel"),
-    // (q324's candidate-frame windows — O(rounds·2k) rows — run inside
-    // the init builders' eager localCheckpoints and never reach the
-    // final executed plan, so no entry is needed here)
     // value-domain-bounded grids (the q243 ECDF class): the rank-sum
     // fold windows over the merged LENGTH-count grid — rows bounded by
     // distinct n_chars values, never document cardinality
@@ -87,17 +85,19 @@ class PlanLintSpec extends SparkSpecBase {
     // q334's cumulative-coverage fold runs over the ≤k-round selection
     // trace (k = 8 by construction — the constant-grid class)
     "q334_greedy_coverage" -> Set("round"),
-    // r18 hidden-subplan walk: q324's candidate windows now REACH the
-    // lint (they run inside the cached codebook builds) — the kmeans||
-    // vote pick over the ≤rounds·2k candidate frame (wt0) and the
+    // q324's candidate windows inside the cached codebook builds: the
+    // kmeans|| vote pick over the ≤rounds·2k candidate frame (wt0) and the
     // md5-sample centroid numbering over k rows (h); both bounded by
     // construction, never by the corpus
     "q324_init_compare"    -> Set("wt0", "h"),
-    // r18 hidden-subplan walk: the TwoPhaseRank bucket-offset window
-    // (≤ nBuckets rows) inside the session-cached (ship_day, tie) rank
-    // spine both layout queries share
+    // the TwoPhaseRank bucket-offset window (≤ nBuckets rows) inside
+    // the session-cached (ship_day, tie) rank spine both layout queries
+    // share
     "q351_layout_pruning"  -> Set("_bkt"),
     "q360_incremental_zonemap" -> Set("_bkt"),
+    // the same ≤ nBuckets bucket-offset window in the rankBy that feeds
+    // q358's `Sinks.write`; it runs only inside that write action
+    "q358_host_sorted_read" -> Set("_bkt"),
     // sampledCentroids' k-row numbering window inside the sized
     // codebook builds (the q80/q324 "h" class)
     "q81_kmeans_sized"     -> Set("h"),
@@ -112,10 +112,9 @@ class PlanLintSpec extends SparkSpecBase {
     * further (q29/q70/q72/q75/q77).
     */
   private val bnljAllow: Set[String] = Set(
-    // r18: the walk now descends into session-cache builds and
-    // mid-frame checkpoints (MidFrames/SessionCaches observers), so
-    // the r17-deleted entries whose sanctioned BNLJs crossed inside
-    // hidden subplans are back, pointing at the build/mid-frame plans:
+    // BNLJs inside session-cache builds (reached through the scans
+    // that read them) and inside localCheckpoints (reached through the
+    // checkpoint's own execution):
     "q31_cosine_topk",   // brute-force vec_id != query_id cross (grid build)
     "q89_bm25_topk",     // BM25 1-row stats crosses (scored-frame build)
     "q115_hard_negatives", // the same grid build via its first toucher
@@ -123,8 +122,6 @@ class PlanLintSpec extends SparkSpecBase {
     "q279_prf_expansion", // cached BM25 build
     "q145_rank_corr",    // calendar-pair BNLJ inside the common-frame checkpoint
     "q64_lsh_neardup",   // bucket-cap BNLJ inside lshNearDupCandidates' checkpoint
-    // r18 hidden-subplan walk — shapes that always existed inside
-    // session-cache builds / mid-frame checkpoints, now observed:
     "q113_pagerank",     // 1-row node-count cross (pageRank init)
     "q225_bpe_train",    // 1-row corpus totals inside the BPE-rules build
     "q246_mmr_rerank",   // constant query-set vec_id != query_id cross
@@ -136,8 +133,8 @@ class PlanLintSpec extends SparkSpecBase {
     "q357_zorder_box_read", // 3-row workload grid cross
     "q358_host_sorted_read", // 3-row workload grid cross
     // the 1-row `df <= cap` broadcast (effectiveDfCap) inside the
-    // shared shingle/pair/cluster builds, observed at each query's own
-    // re-admission under the per-query cache clear:
+    // shared shingle/pair/cluster builds, walked under each query's
+    // own re-admission under the per-query cache clear:
     "q28_ngram_jaccard", "q53_dedup_clusters", "q59_dedup_keeplist",
     "q65_curated_corpus", "q204_cluster_purity", "q238_quality_keeplist",
     "q251_dup_attribution", "q328_cluster_contamination",
@@ -145,9 +142,6 @@ class PlanLintSpec extends SparkSpecBase {
     "q101_ann_recall", "q102_hamming_topk", "q103_funnel",
     "q105_importance_weights", "q107_item_pmi",
     "q125_ri_profile", "q139_kn_bigram", "q141_drift_report",
-    // (q145's calendar-pair BNLJ crosses inside the common-neighbor
-    // frame's r17 localCheckpoint materialization and no longer
-    // reaches the lint's plan — same situation as q332's normalizers)
     "q147_dedup_savings", "q149_rfm_segments",
     "q157_collocations", "q166_centroid_dists", "q171_quality_curve",
     "q179_selfjoin_sketch", "q182_vocab_budget", "q190_probe_curve",
@@ -167,10 +161,6 @@ class PlanLintSpec extends SparkSpecBase {
     "q312_unigram_prune", "q313_cohens_kappa", "q316_bpe_roundtrip",
     "q321_share_shift", "q322_corpus_card", "q324_init_compare",
     "q327_quantile_sketch", "q329_bin_packing", "q330_dq_suite",
-    // (q332's 1-row max normalizers cross inside each half-round's
-    // localCheckpoint materialization and never reach the final
-    // executed plan — same situation as q324's candidate windows)
-
     "q335_dbscan_clusters", // two 1-row stat aggs crossed for the noise row
     "q337_sketch_overlap", // source-enum² sketch grid (20-row sides)
     "q339_reshard_plan", // broadcast vnode ring grid + 1-row total
@@ -184,8 +174,6 @@ class PlanLintSpec extends SparkSpecBase {
     "q352_knob_advisor", // three 1-row corpus aggregates crossed into one stats row
     "q30_simhash_neardup", "q32_cosine_neardup",
     "q33_lsh_topk", "q42_approx_distinct", "q43_topk_aggregator",
-    // (q64's bucket-cap BNLJ crosses inside lshNearDupCandidates' r17
-    // lazy checkpoint — hidden from the pre-execution plan like q332)
     "q52_key_skew", "q57_centroid_assign",
     "q68_split_leakage", "q70_ivf_topk",
     "q73_lm_perplexity", "q75_semantic_dedup", "q76_kmeans_refine",
@@ -195,54 +183,45 @@ class PlanLintSpec extends SparkSpecBase {
     "q95_pca_power", "q96_abtt_removal", "q97_mix_weights",
     "q99_tfidf_terms")
 
+  /** The pre-AQE plan of the frame `build` returns plus that of every
+    * execution Spark reported while it ran: checkpoints (their plan
+    * before the checkpoint), cache-filling and other actions, writes.
+    * Cached builds are walked through the scans that read them.
+    */
+  private def lintedPlans(build: => DataFrame): Seq[SparkPlan] = {
+    val (df, ran) = plansOf(build)
+    PlanLint.physical(df) +: ran.map(_._2.sparkPlan)
+  }
+
   test("registry-wide: no scale-killer plan shapes outside the documented allowlists") {
     val violations = Seq.newBuilder[String]
     val usedWin = Set.newBuilder[String]
     val usedBnlj = Set.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // cold-cache EVERY query (r18): a registry frame session-cached
-      // by an earlier suite OR an earlier lint iteration appears as an
-      // InMemoryTableScan and swallows the subtree whose shape this
-      // walks. Clearing per query makes every query re-admit its own
-      // builds, so each build plan is observed under the query that
-      // owns the allowlist entry.
+      // by an earlier suite OR an earlier lint iteration would be
+      // built under that query, not this one. Clearing per query makes
+      // every query re-admit its own builds, so each build plan is
+      // walked under the query that owns the allowlist entry.
       graft.operators.SessionCaches.clear(spark)
-      // hidden-subplan capture (VERDICT r17 item 3): session-cache
-      // builds and mid-frame checkpoints collapse to scans in the
-      // returned plan; the observers hand us each such frame at
-      // construction time so its shapes are linted too
-      val hidden = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      graft.operators.MidFrames.observer.set(df => hidden += df)
-      val main =
-        try fn(spark, sf0001)
-        finally graft.operators.MidFrames.observer.remove()
-      // plan the MAIN query first (consumer shapes, with cache
-      // substitution as production sees it), then DROP the cache
-      // entries before planning the hidden frames: a persisted build's
-      // own lazy QueryExecution would otherwise self-substitute into a
-      // bare InMemoryTableScan (its plan IS the registered cache
-      // entry) and the build's shapes would vanish from the walk —
-      // exactly the r17 blind spot this capture exists to close
-      val mainPlan = PlanLint.physical(main)
-      graft.operators.SessionCaches.clear(spark)
-      val plans = mainPlan :: hidden.result().toList.map(PlanLint.physical)
+      val plans = lintedPlans(fn(spark, sf0001))
       val wins = plans.flatMap(PlanLint.partitionlessWindows)
       if (wins.nonEmpty) {
         usedWin += name
         val allowed = globalWindowAllow.getOrElse(name, Set.empty[String])
-        wins.filterNot { case (_, c) => allowed.contains(c) }
+        wins.distinct.filterNot { case (_, c) => allowed.contains(c) }
           .foreach { case (k, c) =>
             violations += s"$name: partitionless $k over order=$c" }
       }
-      plans.flatMap(PlanLint.cartesians)
+      plans.flatMap(PlanLint.cartesians).distinct
         .foreach(c => violations += s"$name: CartesianProduct ($c)")
       val bnlj = plans.flatMap(PlanLint.nestedLoopJoins)
       if (bnlj.nonEmpty) {
         usedBnlj += name
         if (!bnljAllow.contains(name))
-          violations += s"$name: unsanctioned BNLJ ${bnlj.mkString("; ")}"
+          violations += s"$name: unsanctioned BNLJ ${bnlj.distinct.mkString("; ")}"
       }
-      plans.flatMap(PlanLint.udfs)
+      plans.flatMap(PlanLint.udfs).distinct
         .foreach(u => violations += s"$name: UDF node $u")
     }
     val v = violations.result()
@@ -255,5 +234,27 @@ class PlanLintSpec extends SparkSpecBase {
     val staleBnlj = bnljAllow -- usedBnlj.result()
     assert(staleBnlj.isEmpty,
       s"stale bnljAllow entries (shape gone — remove): $staleBnlj")
+  }
+
+  test("lint sees a partitionless window in a lazy checkpoint, a persisted build and a write") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    // distinct row counts keep the three plans apart: the cache manager
+    // matches plans up to column names, and a match would show the
+    // persisted build in place of the other two
+    def ranked(c: String, n: Int): DataFrame = spark.range(n).toDF(c)
+      .withColumn("rn", row_number().over(Window.orderBy(col(c))))
+    val cached = ranked("cached_id", 61).persist()
+    try {
+      val seen = lintedPlans {
+        ranked("checkpointed_id", 62).localCheckpoint(eager = false)
+        ranked("written_id", 63).write.format("noop").mode("overwrite")
+          .save()
+        cached.filter(col("rn") > 1)
+      }.flatMap(PlanLint.partitionlessWindows).map(_._2).toSet
+      val missed = Seq("checkpointed_id", "cached_id", "written_id")
+        .filterNot(seen)
+      assert(missed.isEmpty, s"windows the lint did not see: $missed")
+    } finally cached.unpersist()
   }
 }

@@ -3,6 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites: GraftSession's settings at
@@ -45,6 +47,35 @@ trait SparkSpecBase extends AnyFunSuite {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** Runs `body` and returns its result with every query execution it
+    * ran on this session, as (action name, execution), in the order
+    * Spark reported them: actions, writes and `localCheckpoint`s (eager
+    * or lazy), on any thread.
+    */
+  def plansOf[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val probe = spark.range(1)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def report(name: String, qe: QueryExecution): Unit =
+        if (qe eq probe.queryExecution) sentinel.countDown()
+        else seen.add((name, qe))
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        report(name, qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
+        report(name, qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      // the bus delivers in order: once the sentinel's execution
+      // arrives, every execution `body` ran has been reported
+      probe.collect()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (result, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 

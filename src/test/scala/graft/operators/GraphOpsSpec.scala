@@ -240,13 +240,12 @@ class GraphOpsSpec extends SparkSpecBase {
     // row below k and is the answer. Any loop that must run a peel to
     // see that it removes nothing pays at least the fixed one-peel
     // loop's jobs.
-    val checkpointed = Seq.newBuilder[DataFrame]
-    MidFrames.observer.set(df => checkpointed += df)
-    val (rows, jobs, failed) =
-      try jobsOf("kcore-at-fixpoint") {
+    val ((rows, jobs, failed), ran) = plansOf {
+      jobsOf("kcore-at-fixpoint") {
         kCoreRows(GraphOps.kCoreOn(k6Events, k = 3, peels = 4,
           minSupport = 1))
-      } finally MidFrames.observer.remove()
+      }
+    }
     assert(rows === (1 to 6).map(i => (i, 5L)))
     assert(failed.isEmpty)
     val (_, fixedJobs, _) = jobsOf("kcore-fixed-one-peel") {
@@ -255,12 +254,11 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(jobs.size < fixedJobs.size,
       s"${jobs.size} jobs at the fixpoint, ${fixedJobs.size} for one peel")
     // the only semi-joins are the peel's, which would be checkpointed
-    val semis = checkpointed.result().filter(_.queryExecution.optimizedPlan
-      .exists {
+    val semis = ran.collect { case ("localCheckpoint", qe) => qe.optimizedPlan }
+      .filter(_.exists {
         case j: Join => j.joinType == LeftSemi
         case _ => false
       })
-    assert(semis.isEmpty, semis.map(_.queryExecution.optimizedPlan)
-      .mkString("\n"))
+    assert(semis.isEmpty, semis.mkString("\n"))
   }
 }

@@ -9,10 +9,14 @@ import org.apache.spark.storage.StorageLevel
   * over-budget sessions unpersist their least-recently-used entries,
   * forget them in the map, and rebuild them correctly on re-access —
   * registry growth must not tax cache-heavy iterative queries through
-  * unbounded persisted state. Budgets are pinned via the thread-local
-  * override so parallel suites in the shared JVM never see them.
+  * unbounded persisted state. Each test pins `budgetBytes` and
+  * restores it in `finally`: suites run one at a time in the forked
+  * test JVM (`Test / fork := true`, `testForkedParallel` unset), so no
+  * other suite's cached() call sees a pinned budget.
   */
 class SessionCacheBudgetSpec extends SparkSpecBase {
+
+  private val configuredBudget = SessionCaches.budgetBytes
 
   /** Distinct `mult` per entry is load-bearing: cache-manager identity
     * is plan `sameResult`, which canonicalizes away alias NAMES — two
@@ -34,7 +38,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     val s = spark.newSession()
     val m = SessionCaches.newCache[(org.apache.spark.sql.SparkSession, String)]()
     val builds = scala.collection.mutable.Map.empty[String, Int]
-    SessionCaches.budgetOverride.set(1L)
+    SessionCaches.budgetBytes = 1L
     try {
       val a1 = SessionCaches.cached(m, (s, "a"))(mkBuild(s, "a", 2, builds))
       assert(SessionCaches.entryCount(s) === 1)
@@ -56,7 +60,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       // and now b was the LRU entry -> it paid the eviction
       assert(SessionCaches.entryCount(s) === 1)
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s)
     }
   }
@@ -65,7 +69,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     val s = spark.newSession()
     val m = SessionCaches.newCache[(org.apache.spark.sql.SparkSession, String)]()
     val builds = scala.collection.mutable.Map.empty[String, Int]
-    SessionCaches.budgetOverride.set(java.lang.Long.MAX_VALUE)
+    SessionCaches.budgetBytes = java.lang.Long.MAX_VALUE
     try {
       SessionCaches.cached(m, (s, "a"))(mkBuild(s, "a", 2, builds))
       SessionCaches.cached(m, (s, "b"))(mkBuild(s, "b", 3, builds))
@@ -77,7 +81,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       assert(SessionCaches.entryCount(s) === 2)
       assert(builds === Map("a" -> 1, "b" -> 1))
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s)
     }
   }
@@ -90,7 +94,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     // far over the budget (1M longs ≈ 8 MB; budget 1 MB)
     val ckpt = s.range(1000000).toDF("id").localCheckpoint()
     assert(ckpt.count() === 1000000L)
-    SessionCaches.budgetOverride.set(1024L * 1024)
+    SessionCaches.budgetBytes = 1024L * 1024
     try {
       // two tiny entries: owned bytes are KBs, far under the budget —
       // under context-wide metering (the r16 bug) the checkpoint alone
@@ -108,7 +112,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       assert(a.storageLevel !== StorageLevel.NONE)
       assert(b.storageLevel !== StorageLevel.NONE)
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s)
     }
   }
@@ -117,7 +121,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     val s = spark.newSession()
     val m = SessionCaches.newCache[(org.apache.spark.sql.SparkSession, String)]()
     val builds = scala.collection.mutable.Map.empty[String, Int]
-    SessionCaches.budgetOverride.set(1L)
+    SessionCaches.budgetBytes = 1L
     try {
       val t0 = SessionCaches.telemetry
       SessionCaches.cached(m, (s, "a"))(mkBuild(s, "a", 2, builds))
@@ -128,7 +132,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       assert(d.evictions >= 2, s"a then b evicted under budget 1: $d")
       assert(d.rebuilds === 1, s"only a's second build is a rebuild: $d")
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s)
     }
   }
@@ -138,10 +142,10 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     val s2 = spark.newSession()
     val m = SessionCaches.newCache[(org.apache.spark.sql.SparkSession, String)]()
     val builds = scala.collection.mutable.Map.empty[String, Int]
-    SessionCaches.budgetOverride.set(java.lang.Long.MAX_VALUE)
+    SessionCaches.budgetBytes = java.lang.Long.MAX_VALUE
     try {
       val f1 = SessionCaches.cached(m, (s1, "x1"))(mkBuild(s1, "x1", 5, builds))
-      SessionCaches.budgetOverride.set(1L)
+      SessionCaches.budgetBytes = 1L
       // two s2 builds, budget 1: s2 evicts its own LRU, never s1's
       SessionCaches.cached(m, (s2, "x2"))(mkBuild(s2, "x2", 7, builds))
       SessionCaches.cached(m, (s2, "y2"))(mkBuild(s2, "y2", 11, builds))
@@ -149,7 +153,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
       assert(f1.storageLevel !== StorageLevel.NONE,
         "another session's eviction must not unpersist this session's entry")
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s1)
       SessionCaches.clear(s2)
     }
@@ -161,7 +165,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
     // lazy builds: both entries pass their admission check at 0 bytes
     def lazyBuild(name: String, mult: Int): DataFrame =
       s.range(1000).select(col("id"), (col("id") * mult).as(name)).persist()
-    SessionCaches.budgetOverride.set(1L)
+    SessionCaches.budgetBytes = 1L
     try {
       val a = SessionCaches.cached(m, (s, "a"))(lazyBuild("a", 2))
       val b = SessionCaches.cached(m, (s, "b"))(lazyBuild("b", 3))
@@ -179,7 +183,7 @@ class SessionCacheBudgetSpec extends SparkSpecBase {
         "the LRU entry should be evicted by a hit-path budget check")
       assert(b.storageLevel !== StorageLevel.NONE)
     } finally {
-      SessionCaches.budgetOverride.remove()
+      SessionCaches.budgetBytes = configuredBudget
       SessionCaches.clear(s)
     }
   }
